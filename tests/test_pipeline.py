@@ -2,6 +2,7 @@
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -11,6 +12,8 @@ from wikidata_dump_processor_spark import datagen
 from wikidata_dump_processor_spark.plans.pipeline import MANIFEST, StageManifest, run_pipeline
 
 N = 200
+# Spark's bucket file names end in _<bucket id>[.c000].<codec>.parquet
+BUCKET_IN_NAME = r"_(\d{5})(?:\.c\d{3})?\.[\w.]*parquet$"
 
 
 @pytest.fixture(scope="module")
@@ -37,6 +40,60 @@ def test_triples_partitioned_by_pred(out):
     # P####.tsv model: predicate-partitioned layout -> partition pruning
     parts = [d for d in os.listdir(os.path.join(out, "triples")) if d.startswith("pred=")]
     assert "pred=P31" in parts and len(parts) > 3
+
+
+def test_nodes_one_file_per_bucket(result, spark, out):
+    """Writer tasks hold whole buckets: every non-empty bucket of `nodes`
+    is exactly one file, the bucket id in its name is the bucket spec's
+    pmod(hash(id_num), 64) of every row in it, and `_part_id` is that
+    bucket id."""
+    nodes = os.path.join(out, "nodes")
+    files = [f for f in os.listdir(nodes) if f.endswith(".parquet")]
+    named = {}
+    for f in files:
+        m = re.search(BUCKET_IN_NAME, f)
+        assert m, f
+        named.setdefault(int(m.group(1)), []).append(f)
+    assert all(len(fs) == 1 for fs in named.values()), named
+    rows = (
+        spark.read.parquet(nodes)
+        .select(
+            F.regexp_extract(F.input_file_name(), BUCKET_IN_NAME, 1)
+            .cast("int").alias("file_bucket"),
+            F.pmod(F.hash("id_num"), F.lit(64)).alias("bucket"),
+            "_part_id",
+        )
+        .groupBy("file_bucket", "bucket", "_part_id").count()
+        .collect()
+    )
+    assert rows and {r.file_bucket for r in rows} == set(named)
+    for r in rows:
+        assert r.file_bucket == r.bucket == r._part_id, r
+
+
+@pytest.mark.parametrize("table", ["triples", "canonical_triples"])
+def test_pred_partitioned_writes_parallel_one_file_per_salt(result, spark, out, table):
+    """Predicate-partitioned stages keep their file shape (one file per
+    (pred, salt) under each pred= directory) and are written by more than
+    one task when the session has more than one slot."""
+    path = os.path.join(out, table)
+    m = json.load(open(os.path.join(out, MANIFEST)))
+    slots = spark.sparkContext.defaultParallelism
+    n_salts = max(1, min(slots, m["extract"]["metrics"]["rows"] // 25_000))
+    df = spark.read.parquet(path)
+    salts = {
+        r.pred: r.n
+        for r in df.groupBy("pred")
+        .agg(F.countDistinct(F.pmod(F.xxhash64("subj"), F.lit(n_salts))).alias("n"))
+        .collect()
+    }
+    dirs = [d for d in os.listdir(path) if d.startswith("pred=")]
+    assert len(dirs) == len(salts)
+    for d in dirs:
+        n_files = sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        assert n_files == salts[d[len("pred="):]], d
+    if slots > 1:
+        assert df.select("_part_id").distinct().count() > 1
 
 
 def test_manifest_lineage_metrics(out):

@@ -20,6 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -99,8 +100,13 @@ def _driver_cc(spark, edge_rows) -> DataFrame:
         r = find(x)
         if r not in comp_min or x < comp_min[r]:
             comp_min[r] = x
-    rows = [(x, comp_min[find(x)]) for x in parent]
-    return spark.createDataFrame(rows, "id string, component string")
+    ids = list(parent)
+    # an Arrow table plans as a JVM-side LocalTableScan (empty included); a
+    # list of rows would be re-read through a Python worker by every job
+    return spark.createDataFrame(pa.table({
+        "id": pa.array(ids, pa.string()),
+        "component": pa.array([comp_min[find(x)] for x in ids], pa.string()),
+    }))
 
 
 def connected_components(

@@ -21,6 +21,7 @@ fingerprint chain stage -> input.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -373,9 +374,12 @@ def _write_stage_bucketed(
     """``_write_stage`` with the PDS-role bucketed layout (SURVEY.md §1.4,
     PDS.pm:136-150): hash-bucketed + sorted on ``bucket_col``, registered
     in the catalog so a point-lookup or co-located join plans with NO
-    Exchange on this side.  The pre-write ``repartition(buckets, col)``
-    uses the same Murmur3 hash as the bucket spec, so each task holds
-    exactly one bucket -> one file per bucket, no small-file blowup."""
+    Exchange on this side.  The pre-write shuffle is keyed on the bucket
+    id itself (``pmod(hash(col), buckets)``, the bucket spec's Murmur3
+    expression) into ``min(buckets, task slots)`` partitions: each task
+    holds whole buckets, so every bucket is still exactly one file, and
+    the write runs one task per slot instead of one per bucket (64
+    near-empty tasks at small volume).  ``_part_id`` is the bucket id."""
     if manifest.done(stage, fingerprint):
         _ensure_bucketed_table(
             spark, table, manifest.stages[stage]["path"], buckets, bucket_col
@@ -385,8 +389,11 @@ def _write_stage_bucketed(
     if notify:
         notify(f"stage {stage} started")
     t0 = time.time()
-    # lineage AFTER the bucket shuffle so _part_id is the writing bucket
-    df = _with_lineage(df_fn().repartition(buckets, F.col(bucket_col)))
+    bucket_id = F.pmod(F.hash(F.col(bucket_col)), F.lit(buckets))
+    slots = spark.sparkContext.defaultParallelism
+    df = df_fn().withColumn("_part_id", bucket_id).repartition(
+        min(buckets, slots), F.col("_part_id")
+    )
     (
         df.write.mode("overwrite")
         .format("parquet")
@@ -491,9 +498,11 @@ def run_pipeline(
         (wdq2.pl:168, PDS.pm:136-150): a point lookup prunes to one
         bucket file's sorted run, and any join on ``id_num`` against a
         same-bucketed table plans with NO Exchange of the nodes side.
-        ``node_buckets`` is a layout contract (co-located joins require
-        both tables to share it): 64 fits the test/bench scales; a
-        100 TB deployment picks its own (e.g. 4096) once and keeps it.
+        ``node_buckets`` is layout only (co-located joins require both
+        tables to share it): 64 fits the test/bench scales; a 100 TB
+        deployment picks its own (e.g. 4096) once and keeps it.  Write
+        parallelism is the session's task slots, not the bucket count:
+        each writer task holds whole buckets.
       * items sorted within partitions on ``id_num`` (min/max pruning).
     """
     fp = fingerprint or "default"
@@ -523,6 +532,12 @@ def run_pipeline(
     if export_rdf:
         stage_names.append("rdf_ntriples")
     man.plan(stage_names, fp)
+    # Three jobs read the alias table (extract: the collect gate's count and
+    # the collect; mentions: the linking broadcast).  A lazy local
+    # checkpoint runs its lineage (for local rows, a Python-worker round
+    # trip) once per pass, and only a running stage makes it, so a fully
+    # resumed pass never evaluates the input.
+    aliases_once = functools.cache(lambda: aliases.localCheckpoint(eager=False))
     p = lambda name: os.path.join(out_dir, name)
     notify = notifier if callable(notifier) else (lambda msg: None)
     notify(f"pipeline started fingerprint={fp}")
@@ -540,7 +555,7 @@ def run_pipeline(
     parsed = _write_stage(
         spark, man, "extract", fp,
         lambda: TR.parse_entities(
-            extract_and_detect(pages, aliases), extra_cols=("mentions",)
+            extract_and_detect(pages, aliases_once()), extra_cols=("mentions",)
         ),
         p("extracted"), notify=notify,
     )
@@ -568,8 +583,12 @@ def run_pipeline(
     n_salts = max(1, min(slots, n_rows // 25_000))
 
     def by_pred_salted(df):
+        # an explicit partition count: a by-column repartition lets AQE
+        # coalesce small volumes into ONE task that writes every pred=
+        # file serially; with ``slots`` partitions the pred files are
+        # written in parallel, and each (pred, salt) is still one file
         salt = F.pmod(F.xxhash64("subj"), F.lit(n_salts))
-        return df.repartition(F.col("pred"), salt)
+        return df.repartition(slots, F.col("pred"), salt)
 
     # one slot per submitted job (4 stages + CC remap + optional curate),
     # still degrading to sequential at low task-slot counts (see above)
@@ -594,7 +613,9 @@ def run_pipeline(
         )
         f_linked = pool.submit(
             _write_stage, spark, man, "mentions", fp,
-            lambda: link_mentions(exploded_mentions(parsed), aliases, catalog),
+            lambda: link_mentions(
+                exploded_mentions(parsed), aliases_once(), catalog
+            ),
             p("mentions"), notify=notify,
         )
         f_curate = None

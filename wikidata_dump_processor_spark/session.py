@@ -11,7 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _derived_driver_mem() -> str:
+    """Default heap when ``SPARK_DRIVER_MEM`` is unset: a quarter of the
+    host's available memory (1-16 GB), so a test JVM, the bench or CLI
+    JVMs it spawns, and their Python workers fit side by side."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail_kb = next(
+                int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "4g"  # no /proc/meminfo (not Linux)
+    return f"{max(1024, min(16 * 1024, avail_kb // 4 // 1024))}m"
 
 
 def get_spark(
@@ -35,6 +49,7 @@ def get_spark(
         master = os.environ.get("SPARK_MASTER")
         if master is None:
             master = f"local[{cpus}]"
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM")
     b = SparkSession.builder
     if master:
         b = b.master(master)
@@ -79,18 +94,21 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # Pin the heap (-Xms == -Xmx) and pre-touch it: G1's incremental
-        # heap expansion under allocation pressure causes kernel-side page
-        # zeroing churn that serializes high-concurrency Arrow exchange
-        # (measured: 5x slowdown of mapInPandas at local[32] vs local[8]
-        # on this box before pinning).  On a real cluster the same applies
-        # to executor JVMs: spark.executor.extraJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '16g')} -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.memory", driver_mem or _derived_driver_mem())
     )
+    if driver_mem:
+        # An explicit heap is pinned (-Xms == -Xmx) and pre-touched: G1's
+        # incremental heap expansion under allocation pressure causes
+        # kernel-side page zeroing churn that serializes high-concurrency
+        # Arrow exchange (measured: 5x slowdown of mapInPandas at local[32]
+        # vs local[8] on a 32-core box before pinning).  The derived
+        # default is not: a pinned heap must commit up front, which fails
+        # when several JVMs share a small host.  On a real cluster the
+        # same applies to executor JVMs: spark.executor.extraJavaOptions.
+        b = b.config(
+            "spark.driver.extraJavaOptions",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
