@@ -36,6 +36,19 @@ def test_all_tables_materialized(result, out):
         assert os.path.exists(os.path.join(out, "_pipeline_manifest.json"))
 
 
+def test_returned_schemas_equal_inferred(result, spark, out):
+    """Stages are read back with the schema recorded at commit; what the
+    pipeline returns is what Spark infers from the files."""
+    m = json.load(open(os.path.join(out, MANIFEST)))
+    for key, stage in [("extracted", "extract"), ("triples", "triples"),
+                       ("items", "items"), ("props", "props"),
+                       ("mentions", "mentions"),
+                       ("canonical_triples", "canonical"), ("nodes", "nodes")]:
+        assert "schema" in m[stage], stage
+        inferred = spark.read.parquet(m[stage]["path"]).schema
+        assert result[key].schema == inferred, key
+
+
 def test_triples_partitioned_by_pred(out):
     # P####.tsv model: predicate-partitioned layout -> partition pruning
     parts = [d for d in os.listdir(os.path.join(out, "triples")) if d.startswith("pred=")]
@@ -181,6 +194,62 @@ def test_partition_metrics_hadoop_fs_listing(spark, tmp_path):
         assert m["bytes"] > 0
         assert len(m["partitions"]) == 4
         assert all(rel.endswith(".parquet") for rel in m["partitions"])
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, ids of the Spark jobs it submitted from this thread)."""
+    sc = spark.sparkContext
+    group = f"probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("layout", ["flat", "pred_partitioned"])
+def test_read_committed_stage_submits_no_job(spark, tmp_path, layout):
+    """A committed stage is read with the schema recorded at commit: no
+    schema-inference job, no listing job (a pred= layout with more than
+    32 leaf dirs lists on the driver under a local master), and the
+    returned schema, column order included, is the one Spark infers.
+    The resume branch of ``_write_stage`` takes the same read."""
+    from wikidata_dump_processor_spark.plans.pipeline import _write_stage, read_stage
+
+    out = str(tmp_path / "pipe")
+    path = os.path.join(out, "stage")
+    partition_by = ["pred"] if layout == "pred_partitioned" else None
+    df_fn = lambda: spark.range(400, numPartitions=4).select(  # noqa: E731
+        F.concat(F.lit("Q"), F.col("id").cast("string")).alias("subj"),
+        F.concat(F.lit("P"), (F.col("id") % 40).cast("string")).alias("pred"),
+        F.parse_json(F.lit('{"k": 1}')).alias("v"),
+        F.col("id").alias("n"),
+    )
+    man = StageManifest(out)
+    fresh = _write_stage(spark, man, "s", "fp", df_fn, path, partition_by, ["subj"])
+    if partition_by:
+        assert sum(d.startswith("pred=") for d in os.listdir(path)) == 40
+    inferred = spark.read.parquet(path).schema
+    assert fresh.schema == inferred
+
+    entry = StageManifest(out).stages["s"]
+    assert "schema" in entry
+    read, jobs = _jobs_in(spark, lambda: read_stage(spark, entry))
+    assert jobs == [] and read.schema == inferred
+
+    def resume():
+        return _write_stage(
+            spark, StageManifest(out), "s", "fp", df_fn, path, partition_by, ["subj"]
+        )
+
+    resumed, jobs = _jobs_in(spark, resume)
+    assert jobs == [] and resumed.schema == inferred
+    assert resumed.count() == 400
+
+    # an entry committed before schemas were recorded is still readable
+    legacy = {k: v for k, v in entry.items() if k != "schema"}
+    assert read_stage(spark, legacy).schema == inferred
 
 
 def test_interrupted_stage_shows_in_progress_then_recommits(spark, tmp_path):

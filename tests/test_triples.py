@@ -5,11 +5,13 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from wikidata_dump_processor_spark import datagen
 from wikidata_dump_processor_spark.operators import triples as TR
 from wikidata_dump_processor_spark.operators.text_extract import extract_text
 from wikidata_dump_processor_spark.reference_semantics import golden_triples_for_pages
+from wikidata_dump_processor_spark.schemas import ALIASES_SCHEMA
 
 
 def _norm(obj):
@@ -236,3 +238,23 @@ def test_authctrl_claim_triples_equals_filtered_extract(spark):
     )
     fast = sorted(tuple(r) for r in TR.authctrl_claim_triples(parsed).collect())
     assert fast == full and len(fast) > 0
+
+
+@pytest.mark.parametrize("make, schema", [
+    (datagen.gen_aliases, ALIASES_SCHEMA),
+    (datagen.gen_entity_catalog, "id string, id_num long, type string, "
+     "lang string, label string, P31 string, prior double"),
+    (TR.filter_bank_df, "pred string, pred_label string, transform int"),
+])
+def test_small_inputs_plan_as_local_table_scan(spark, make, schema):
+    """The driver-built dimension inputs are Arrow tables: their scan is a
+    JVM-side LocalTableScan, not a Python-RDD ``Scan ExistingRDD`` that
+    every reading job would run through a Python worker.  The schema,
+    nullability included, is the declared one."""
+    df = make(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    assert df.schema == schema
+    assert df.count() > 0

@@ -120,9 +120,13 @@ def main():
         "kg_fused_stage1": [
             ("MapInPandas", "extraction + mention scan fused in one Python pass", True),
         ],
-        "kg_triples": [("BroadcastHashJoin", "filter bank joined via broadcast", True)],
+        "kg_triples": [
+            ("BroadcastHashJoin", "filter bank joined via broadcast", True),
+            ("Scan ExistingRDD", "filter bank is an Arrow LocalTableScan, not a Python-RDD scan", False),
+        ],
         "kg_linking": [
             ("BroadcastHashJoin", "surface winners broadcast — mention stream never shuffled", True),
+            ("Scan ExistingRDD", "aliases and catalog are Arrow LocalTableScans, not Python-RDD scans", False),
         ],
         "kg_inverted_index_stats": [
             ("ObjectHashAggregate", "NO array aggregation on the index hot path", False),

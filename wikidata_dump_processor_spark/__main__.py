@@ -166,7 +166,7 @@ def _query_main(argv: list[str]) -> int:
             # re-attach the bucketed layout so the lookup joins plan
             # with no Exchange on the nodes side
             _ensure_bucketed_table(
-                spark, nmet["table"], npath,
+                spark, nmet["table"], dict(ninfo, path=npath),
                 nmet.get("buckets", 64), "id_num",
             )
             nodes = spark.table(nmet["table"])

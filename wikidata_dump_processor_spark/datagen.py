@@ -31,6 +31,7 @@ from datetime import datetime, timedelta, timezone
 import pandas as pd
 
 from .schemas import LANGS
+from .session import local_df
 
 SEED = 42
 HEAD_DOMAIN = "en.head-domain.example"
@@ -339,7 +340,7 @@ def gen_pages(spark, n: int, partitions: int | None = None):
 def gen_aliases(spark):
     from .schemas import ALIASES_SCHEMA
 
-    return spark.createDataFrame(alias_rows(), ALIASES_SCHEMA)
+    return local_df(spark, alias_rows(), ALIASES_SCHEMA)
 
 
 def gen_entity_catalog(spark):
@@ -351,8 +352,9 @@ def gen_entity_catalog(spark):
         prior = 1000.0 if i == 0 else 1.0 / (1 + i)
         label = _SURFACES[i] if i < len(_SURFACES) else f"catalog entity {i}"
         rows.append((qid, 1000 + i if i else 1, "item", "en", label, "Q5" if i % 3 == 0 else "Q100", prior))
-    return spark.createDataFrame(
-        rows, "id string, id_num long, type string, lang string, label string, P31 string, prior double"
+    return local_df(
+        spark, rows,
+        "id string, id_num long, type string, lang string, label string, P31 string, prior double",
     )
 
 

@@ -108,9 +108,11 @@ def _compiled_alternation(patterns: list[str]):
 def broadcast_alias_list(aliases: DataFrame):
     """Distinct lowercased surfaces as a Spark broadcast, behind the
     driver-collect gate.  The gate's count and the collect are two jobs
-    over ``aliases``; a caller that reads the input again elsewhere
-    materializes it first (``run_pipeline`` does), so its lineage runs
-    once rather than once per job."""
+    over ``aliases``.  A local Arrow table (``datagen.gen_aliases``) plans
+    as a JVM-side ``LocalTableScan``, so they run no Python worker; a
+    caller whose input is computed and read again elsewhere materializes
+    it first (``run_pipeline`` does), so its lineage runs once rather
+    than once per job."""
     spark = aliases.sparkSession
     distinct_aliases = aliases.select("alias").distinct()
     n_aliases = distinct_aliases.count()

@@ -19,6 +19,7 @@ from ..schemas import (
     LANGS,
     RAW_MENTION_PATTERNS,
 )
+from ..session import local_df
 
 # ---------------------------------------------------------------------------
 # raw JSON line normalization (wdq1.pl:484-492): skip array brackets, strip
@@ -144,7 +145,7 @@ def filter_bank_df(spark):
     """The property filter bank as a (broadcastable) DataFrame
     (wdq1.pl:344-409 via schemas.FILTER_BANK)."""
     rows = [(p, lbl, tr) for p, (lbl, tr) in FILTER_BANK.items()]
-    return spark.createDataFrame(rows, "pred string, pred_label string, transform int")
+    return local_df(spark, rows, "pred string, pred_label string, transform int")
 
 
 def claim_triples(items: DataFrame) -> DataFrame:

@@ -31,6 +31,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import triples as TR
 from ..operators.canonicalize import canonical_remap, rewrite_triples
@@ -85,7 +86,7 @@ def preflight_input_gate(
 
 
 class StageManifest:
-    """Tiny snapshot log: stage -> {fingerprint, path, metrics, ts}.
+    """Tiny snapshot log: stage -> {fingerprint, path, metrics, schema, ts}.
 
     ``snapshot_backend`` additionally mirrors every stage commit into a
     snapshot catalog (plans/snapshots.py: ``"json"`` side-log always,
@@ -166,7 +167,10 @@ class StageManifest:
             }
             self._flush()
 
-    def commit(self, stage: str, fingerprint: str, path: str, metrics: dict):
+    def commit(
+        self, stage: str, fingerprint: str, path: str, metrics: dict,
+        schema: StructType | None = None,
+    ):
         with self._lock:
             started = self.stages.get(stage, {}).get("started_at")
             entry = {
@@ -177,6 +181,8 @@ class StageManifest:
                 "started_at": started,
                 "committed_at": time.time(),
             }
+            if schema is not None:
+                entry["schema"] = schema.jsonValue()
             if self.snapshots is not None:
                 entry["snapshot_id"] = self.snapshots.commit(
                     stage, path, fingerprint
@@ -190,6 +196,20 @@ class StageManifest:
         with open(tmp, "w") as f:
             json.dump(self.stages, f, indent=1, sort_keys=True)
         os.replace(tmp, self.path)  # atomic snapshot commit
+
+
+def read_stage(spark: SparkSession, entry: dict) -> DataFrame:
+    """A committed parquet stage, read with the schema it was written
+    with, so the read plans without Spark's schema-inference job (one
+    1-task job per read).  Spark still moves partition columns last and
+    makes every column nullable, as inference does; a partition column
+    keeps its written type where inference would guess one from the
+    directory names.  Entries committed before schemas were recorded
+    are inferred."""
+    reader = spark.read
+    if "schema" in entry:
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    return reader.parquet(entry["path"])
 
 
 def _with_lineage(df: DataFrame) -> DataFrame:
@@ -311,9 +331,10 @@ def _write_stage(
     extra_metrics_fn=None,
     notify=None,
 ) -> DataFrame:
-    """Run one stage with resume semantics; returns the materialized DF."""
+    """Run one stage with resume semantics; returns the materialized DF,
+    read back through ``read_stage`` with the written plan's schema."""
     if manifest.done(stage, fingerprint):
-        return spark.read.parquet(manifest.stages[stage]["path"])
+        return read_stage(spark, manifest.stages[stage])
     manifest.start(stage, fingerprint)
     if notify:
         notify(f"stage {stage} started")
@@ -329,16 +350,16 @@ def _write_stage(
     metrics = _partition_metrics(spark, path)
     if extra_metrics_fn is not None:
         metrics.update(extra_metrics_fn() or {})
-    manifest.commit(stage, fingerprint, path, metrics)
+    manifest.commit(stage, fingerprint, path, metrics, df.schema)
     if notify:
         notify(f"stage {stage} finished rows={metrics.get('rows')}")
     if os.environ.get("PIPELINE_TIMING"):
         print(f"[stage {stage}] write={t1 - t0:.2f}s metrics={time.time() - t1:.2f}s", flush=True)
-    return spark.read.parquet(path)
+    return read_stage(spark, manifest.stages[stage])
 
 
 def _ensure_bucketed_table(
-    spark: SparkSession, table: str, path: str,
+    spark: SparkSession, table: str, entry: dict,
     buckets: int, bucket_col: str,
 ) -> None:
     """Re-register an already-written bucketed layout with the session
@@ -346,12 +367,13 @@ def _ensure_bucketed_table(
     loses table metadata between sessions, but the bucket ids are encoded
     in the parquet file names, so a CREATE TABLE with the matching
     CLUSTERED BY spec restores exchange-free join planning — the same
-    re-attach Iceberg does from its own metadata)."""
+    re-attach Iceberg does from its own metadata).  The columns come from
+    the manifest entry's recorded schema (no Spark job)."""
     if spark.catalog.tableExists(table):
         return
-    fields = spark.read.parquet(path).schema.fields
+    fields = read_stage(spark, entry).schema.fields
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
-    loc = path.replace("'", "''")  # SQL-escape quotes in the location
+    loc = entry["path"].replace("'", "''")  # SQL-escape quotes in the location
     spark.sql(
         f"CREATE TABLE {table} ({cols}) USING parquet "
         f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
@@ -382,7 +404,7 @@ def _write_stage_bucketed(
     near-empty tasks at small volume).  ``_part_id`` is the bucket id."""
     if manifest.done(stage, fingerprint):
         _ensure_bucketed_table(
-            spark, table, manifest.stages[stage]["path"], buckets, bucket_col
+            spark, table, manifest.stages[stage], buckets, bucket_col
         )
         return spark.table(table)
     manifest.start(stage, fingerprint)
@@ -406,7 +428,7 @@ def _write_stage_bucketed(
     metrics = _partition_metrics(spark, path)
     metrics["buckets"] = buckets
     metrics["table"] = table
-    manifest.commit(stage, fingerprint, path, metrics)
+    manifest.commit(stage, fingerprint, path, metrics, df.schema)
     if notify:
         notify(f"stage {stage} finished rows={metrics.get('rows')}")
     if os.environ.get("PIPELINE_TIMING"):
@@ -534,9 +556,10 @@ def run_pipeline(
     man.plan(stage_names, fp)
     # Three jobs read the alias table (extract: the collect gate's count and
     # the collect; mentions: the linking broadcast).  A lazy local
-    # checkpoint runs its lineage (for local rows, a Python-worker round
-    # trip) once per pass, and only a running stage makes it, so a fully
-    # resumed pass never evaluates the input.
+    # checkpoint runs its lineage once per pass (a computed input, such
+    # as a parquet read, is not re-scanned by each job; a local Arrow
+    # table is already a JVM-side scan), and only a running stage makes
+    # it, so a fully resumed pass never evaluates the input.
     aliases_once = functools.cache(lambda: aliases.localCheckpoint(eager=False))
     p = lambda name: os.path.join(out_dir, name)
     notify = notifier if callable(notifier) else (lambda msg: None)
@@ -672,16 +695,19 @@ def run_pipeline(
         # instead of serializing behind it (r7 — the group's critical
         # path was triples-write + cc_loop back to back;
         # identifier_edges sees the exact same (subj, pred, obj) rows
-        # either way, pytest-asserted).  On RESUME with a committed
-        # triples snapshot the authctrl filter partition-prunes the
-        # pred-partitioned layout, which is cheaper still, so that path
-        # reads the snapshot.
+        # either way, pytest-asserted).  When the triples snapshot is
+        # already committed as this job starts, the authctrl filter
+        # partition-prunes the pred-partitioned layout, which is cheaper
+        # still, so that path reads the snapshot (with its recorded
+        # schema: no inference job).  That happens on resume, and on a
+        # fresh pass whose pool has fewer lanes than jobs (4 slots: 2
+        # lanes), where this job queues behind the triples write.
         def _remap_job():
             t0 = time.time()
             if man.done("triples", fp):
-                src = spark.read.parquet(
-                    man.stages["triples"]["path"]
-                ).select("subj", "pred", "obj", "src_url")
+                src = read_stage(spark, man.stages["triples"]).select(
+                    "subj", "pred", "obj", "src_url"
+                )
             else:
                 src = TR.authctrl_claim_triples(parsed)
             r = canonical_remap(src).localCheckpoint(eager=False)
