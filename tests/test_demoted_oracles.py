@@ -8,42 +8,18 @@ green driver slot or a dedicated pytest moved here.  The check is the
 driver's own compare, not a weaker one: Spark result via ``toPandas``
 vs DuckDB via ``.df()`` on the same parquet tables, identical column
 sets, and a repr-level value multiset with NO numeric normalization
-(the same strictness that caught the round-1 type-drift mismatches).
+(the same strictness that caught the round-1 type-drift mismatches):
+``canon`` is ``tools/check_oracle.py``'s, the function the driver-gate
+replica and perfbench use.
 """
 
 from __future__ import annotations
 
-import os
-
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
+from tools.check_oracle import SF_DIR, TABLES, canon
 from wikidata_dump_processor_spark.queries_catalog import PYTEST_ORACLES
-
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _cell(v):
-    if v is None:
-        return "<null>"
-    if isinstance(v, float) and np.isnan(v):
-        return "<null>"
-    if v is pd.NaT:
-        return "<null>"
-    return f"{type(v).__name__}:{v!r}"
-
-
-def _canon(pdf: pd.DataFrame) -> list[str]:
-    cols = sorted(pdf.columns)
-    return sorted(
-        "\x01".join(_cell(r[c]) for c in cols) for _, r in pdf.iterrows()
-    )
 
 
 @pytest.fixture(scope="module")
@@ -70,4 +46,4 @@ def test_demoted_query_matches_oracle(spark, ddb, name):
     want = ddb.sql(sql).df()
     assert sorted(got.columns) == sorted(want.columns), name
     assert len(got) == len(want), name
-    assert _canon(got) == _canon(want), name
+    assert canon(got) == canon(want), name

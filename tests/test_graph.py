@@ -262,6 +262,24 @@ def test_transitive_closure_from_golden(spark, triple_rows):
     assert got == want
 
 
+def test_transitive_closure_from_seed_list_is_local_table_scan(spark):
+    """A seed list plans as an Arrow ``LocalTableScan``: the closure's
+    plan holds no Python-RDD ``Scan ExistingRDD``, so no hop's job runs
+    through a Python worker."""
+    from wikidata_dump_processor_spark.operators.graph import (
+        transitive_closure_from,
+    )
+
+    chain = spark.range(6).select(
+        F.concat(F.lit("Q"), F.col("id").cast("string")).alias("src"),
+        F.concat(F.lit("Q"), (F.col("id") + 1).cast("string")).alias("dst"),
+    )
+    cl = transitive_closure_from(chain, ["Q0", "Q3"], checkpoint=False)
+    assert {r.id for r in cl.collect()} == {f"Q{i}" for i in range(1, 7)}
+    plan = cl._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+
+
 def test_transitive_closure_empty_and_fixpoint_gate(spark):
     from wikidata_dump_processor_spark.operators.graph import (
         transitive_closure_from,

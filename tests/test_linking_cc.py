@@ -152,6 +152,21 @@ def test_detect_mentions_alias_gate(spark, monkeypatch):
     assert "new york city" in surfaces and "new york" not in surfaces
 
 
+def test_alias_gate_and_collect_run_as_one_collect(spark, jobs_in):
+    """The driver-collect gate and the collect are one action:
+    ``broadcast_alias_list`` submits no more jobs than one collect of the
+    distinct surfaces, and broadcasts the same lowercased surfaces."""
+    from wikidata_dump_processor_spark.operators import mentions as M
+
+    aliases = datagen.gen_aliases(spark)
+    rows, collect_jobs = jobs_in(
+        lambda: aliases.select("alias").distinct().collect()
+    )
+    bc, jobs = jobs_in(lambda: M.broadcast_alias_list(aliases))
+    assert collect_jobs and len(jobs) <= len(collect_jobs), (jobs, collect_jobs)
+    assert sorted(bc.value) == sorted(r.alias.lower() for r in rows)
+
+
 def test_canonicalization_on_shared_viaf(spark):
     n = 300
     parsed = TR.parse_entities(extract_text(datagen.gen_pages(spark, n)))

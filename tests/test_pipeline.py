@@ -196,20 +196,8 @@ def test_partition_metrics_hadoop_fs_listing(spark, tmp_path):
         assert all(rel.endswith(".parquet") for rel in m["partitions"])
 
 
-def _jobs_in(spark, fn):
-    """(fn's result, ids of the Spark jobs it submitted from this thread)."""
-    sc = spark.sparkContext
-    group = f"probe-{os.urandom(4).hex()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("layout", ["flat", "pred_partitioned"])
-def test_read_committed_stage_submits_no_job(spark, tmp_path, layout):
+def test_read_committed_stage_submits_no_job(spark, tmp_path, jobs_in, layout):
     """A committed stage is read with the schema recorded at commit: no
     schema-inference job, no listing job (a pred= layout with more than
     32 leaf dirs lists on the driver under a local master), and the
@@ -235,7 +223,7 @@ def test_read_committed_stage_submits_no_job(spark, tmp_path, layout):
 
     entry = StageManifest(out).stages["s"]
     assert "schema" in entry
-    read, jobs = _jobs_in(spark, lambda: read_stage(spark, entry))
+    read, jobs = jobs_in(lambda: read_stage(spark, entry))
     assert jobs == [] and read.schema == inferred
 
     def resume():
@@ -243,7 +231,7 @@ def test_read_committed_stage_submits_no_job(spark, tmp_path, layout):
             spark, StageManifest(out), "s", "fp", df_fn, path, partition_by, ["subj"]
         )
 
-    resumed, jobs = _jobs_in(spark, resume)
+    resumed, jobs = jobs_in(resume)
     assert jobs == [] and resumed.schema == inferred
     assert resumed.count() == 400
 
@@ -403,6 +391,71 @@ def test_graceful_stop_and_resume(spark, tmp_path):
     res = run_pipeline(spark, pages, datagen.gen_aliases(spark), out,
                        fingerprint="g1")
     assert res["canonical_triples"].count() > 0
+
+
+# stop after extract, resume, then resume a complete run; prints the
+# session's slots and the stages the last pass committed again
+_LANES_RUN = """
+import json, os, sys
+from wikidata_dump_processor_spark import datagen
+from wikidata_dump_processor_spark.plans.pipeline import (
+    MANIFEST, GracefulStop, run_pipeline,
+)
+from wikidata_dump_processor_spark.session import get_spark
+
+cpus, out = int(sys.argv[1]), sys.argv[2]
+spark = get_spark("lanes", cpus=cpus, shuffle_partitions=8, master=f"local[{cpus}]")
+pages = datagen.gen_pages(spark, 300).localCheckpoint(eager=True)
+al, cat = datagen.gen_aliases(spark), datagen.gen_entity_catalog(spark)
+run = lambda **kw: run_pipeline(spark, pages, al, out, cat, fingerprint="lanes", **kw)
+stop = out + ".STOP"
+open(stop, "w").close()
+try:
+    run(stop_file=stop)
+    sys.exit("the stop file did not stop the run")
+except GracefulStop:
+    os.remove(stop)
+run()
+committed = lambda: {k: v["committed_at"] for k, v in
+                     json.load(open(os.path.join(out, MANIFEST))).items()}
+before = committed()
+run()
+print(json.dumps({
+    "slots": spark.sparkContext.defaultParallelism,
+    "recommitted": sorted(k for k, t in committed().items() if before.get(k) != t),
+}))
+spark.stop()
+"""
+
+
+def test_one_lane_run_matches_two_lanes(spark, tmp_path):
+    """Below 4 slots every stage group runs in one lane (canonical, then
+    nodes).  A local[2] run, stopped after extract and resumed, writes the
+    same canonical triples and nodes rows as a local[4] run (two lanes),
+    and a resume of either complete run commits nothing new."""
+    import subprocess
+    import sys
+    from collections import Counter
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    rows = {}
+    for cpus in (2, 4):
+        out = str(tmp_path / f"local{cpus}")
+        r = subprocess.run(
+            [sys.executable, "-c", _LANES_RUN, str(cpus), out],
+            capture_output=True, text=True, timeout=600, cwd=repo, env=env,
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        summary = json.loads(r.stdout.strip().splitlines()[-1])
+        assert summary == {"slots": cpus, "recommitted": []}, summary
+        rows[cpus] = {
+            t: Counter(repr(tuple(r)) for r in spark.read.parquet(
+                os.path.join(out, t)).drop("_part_id").collect())
+            for t in ("canonical_triples", "nodes")
+        }
+    for t in ("canonical_triples", "nodes"):
+        assert rows[2][t] and rows[2][t] == rows[4][t], t
 
 
 def test_sql_views_over_pipeline_outputs(result, spark):

@@ -625,7 +625,7 @@ def main():
     # scan (one partition directory on the pred-partitioned layout),
     # (b) probe each frontier via a BROADCAST left-semi join (the edge
     # table is never shuffled for a small frontier), (c) stay free of
-    # Python nodes.  checkpoint=False keeps every iteration's join in
+    # Python nodes, a Python-RDD seed scan included.  checkpoint=False keeps every iteration's join in
     # one inspectable plan instead of behind lineage truncation.
     from wikidata_dump_processor_spark.operators.graph import (
         transitive_closure_from,
@@ -647,12 +647,14 @@ def main():
         and "LeftSemi" in final_cl
         and "BatchEvalPython" not in final_cl
         and "MapInPandas" not in final_cl
+        and "Scan ExistingRDD" not in final_cl
     )
     out.append("## property-path closure (operators/graph.py, plans/bgp.py)\n")
     out.append(
         f"- {'PASS' if ok else 'FAIL'}: predicate constant pushed into the "
         "edge scan, frontier probed via broadcast left-semi join (edge "
-        "table never shuffled), zero Python nodes"
+        "table never shuffled), zero Python nodes (the seed frontier is an "
+        "Arrow LocalTableScan, not a Python-RDD `Scan ExistingRDD`)"
     )
     if not ok:
         failures.append(("closure", "pushdown + broadcast semi, no Python"))

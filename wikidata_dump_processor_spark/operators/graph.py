@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 ENTITY_RE = r"^[QL]\d+$"
 
 
@@ -57,7 +59,7 @@ def k_hop_subgraph(
     if isinstance(seeds, DataFrame):
         frontier = seeds.toDF("id").distinct()
     else:
-        frontier = spark.createDataFrame([(s,) for s in set(seeds)], "id string")
+        frontier = local_df(spark, [(s,) for s in set(seeds)], "id string")
     t = triples.select("subj", "pred", "obj").filter(
         F.col("subj").rlike(ENTITY_RE)
     )
@@ -246,8 +248,8 @@ def pagerank(
                 .agg(F.sum("_w").alias("_w"))
             )
         else:
-            r_df = spark.createDataFrame(
-                [(x, 1.0) for x in set(reset)], "id string, _w double"
+            r_df = local_df(
+                spark, [(x, 1.0) for x in set(reset)], "id string, _w double"
             )
         base = base.join(r_df, "id", "left").withColumn(
             "_w", F.coalesce("_w", F.lit(0.0))
@@ -358,7 +360,7 @@ def transitive_closure_from(
     if isinstance(seeds, DataFrame):
         frontier = seeds.toDF("id").distinct()
     else:
-        frontier = spark.createDataFrame([(s,) for s in set(seeds)], "id string")
+        frontier = local_df(spark, [(s,) for s in set(seeds)], "id string")
     e = edges.select(F.col("src"), F.col("dst"))
     reached = None
     for _i in range(max_iters):
@@ -488,7 +490,7 @@ def transitive_closure_pairs_from(
     if isinstance(seeds, DataFrame):
         s = seeds.toDF("id").distinct()
     else:
-        s = spark.createDataFrame([(x,) for x in set(seeds)], "id string")
+        s = local_df(spark, [(x,) for x in set(seeds)], "id string")
     e = edges.select(F.col("src"), F.col("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )

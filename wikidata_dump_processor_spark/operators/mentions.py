@@ -107,25 +107,27 @@ def _compiled_alternation(patterns: list[str]):
 
 def broadcast_alias_list(aliases: DataFrame):
     """Distinct lowercased surfaces as a Spark broadcast, behind the
-    driver-collect gate.  The gate's count and the collect are two jobs
-    over ``aliases``.  A local Arrow table (``datagen.gen_aliases``) plans
-    as a JVM-side ``LocalTableScan``, so they run no Python worker; a
-    caller whose input is computed and read again elsewhere materializes
-    it first (``run_pipeline`` does), so its lineage runs once rather
-    than once per job."""
+    driver-collect gate.  One collect of at most gate + 1 distinct
+    surfaces both gates and collects, so ``aliases`` is read by one
+    action.  A local Arrow table (``datagen.gen_aliases``) plans as a
+    JVM-side ``LocalTableScan``, so it runs no Python worker; a caller
+    whose input is computed and read again elsewhere materializes it
+    first (``run_pipeline`` does), so its lineage runs once rather than
+    once per job."""
     spark = aliases.sparkSession
-    distinct_aliases = aliases.select("alias").distinct()
-    n_aliases = distinct_aliases.count()
-    if n_aliases > MAX_BROADCAST_ALIASES:
+    rows = (
+        aliases.select("alias").distinct()
+        .limit(MAX_BROADCAST_ALIASES + 1).collect()
+    )
+    if len(rows) > MAX_BROADCAST_ALIASES:
         raise ValueError(
-            f"alias dictionary has {n_aliases} surfaces, over the "
-            f"{MAX_BROADCAST_ALIASES} driver-collect gate; the fused "
+            f"alias dictionary has more than {MAX_BROADCAST_ALIASES} "
+            "surfaces, over the driver-collect gate; the fused "
             "extract_and_detect pass needs one automaton — pre-filter the "
             "dictionary, or use detect_mentions, which shards automatically "
             "(k scan passes + one mention-stream resolution)"
         )
-    alias_list = [r.alias.lower() for r in distinct_aliases.collect()]
-    return spark.sparkContext.broadcast(alias_list)
+    return spark.sparkContext.broadcast([r.alias.lower() for r in rows])
 
 
 def _resolve_matches(matches: list[tuple[int, int, str]]) -> list[tuple[str, int, int]]:

@@ -55,6 +55,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 POSITIONS = ("subj", "pred", "obj")
 
 # constant predicate with a SPARQL path modifier: P279+ (one or more
@@ -270,7 +272,7 @@ def _reflexive_seed(spark, reach: DataFrame, seed: str) -> DataFrame:
     """`*` with a constant endpoint: the zero-length path binds the
     constant itself (SPARQL: a zero-length path matches any term)."""
     return reach.unionByName(
-        spark.createDataFrame([(seed,)], "id string")
+        local_df(spark, [(seed,)], "id string")
     ).distinct()
 
 

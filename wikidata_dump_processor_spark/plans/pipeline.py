@@ -87,6 +87,8 @@ def preflight_input_gate(
 
 class StageManifest:
     """Tiny snapshot log: stage -> {fingerprint, path, metrics, schema, ts}.
+    A committed entry's timestamps are ``started_at``, ``written_at`` (data
+    written, metrics not yet taken) and ``committed_at``.
 
     ``snapshot_backend`` additionally mirrors every stage commit into a
     snapshot catalog (plans/snapshots.py: ``"json"`` side-log always,
@@ -169,7 +171,7 @@ class StageManifest:
 
     def commit(
         self, stage: str, fingerprint: str, path: str, metrics: dict,
-        schema: StructType | None = None,
+        schema: StructType | None = None, written_at: float | None = None,
     ):
         with self._lock:
             started = self.stages.get(stage, {}).get("started_at")
@@ -179,6 +181,7 @@ class StageManifest:
                 "path": path,
                 "metrics": metrics,
                 "started_at": started,
+                "written_at": written_at,
                 "committed_at": time.time(),
             }
             if schema is not None:
@@ -319,6 +322,35 @@ def _partition_metrics(spark: SparkSession, path: str) -> dict:
     }
 
 
+def _run_stage(
+    manifest: StageManifest,
+    stage: str,
+    fingerprint: str,
+    path: str,
+    write,
+    metrics,
+    read,
+    notify=None,
+) -> DataFrame:
+    """The one stage protocol: a stage committed under ``fingerprint`` is
+    resumed; otherwise it is marked started, written (``write()`` returns
+    the written plan's schema, or None for a non-parquet layout), stamped
+    ``written_at``, measured (``metrics()``) and committed, with a notice
+    on start and finish.  Fresh and resumed passes both return
+    ``read(entry)`` of the committed manifest entry."""
+    if not manifest.done(stage, fingerprint):
+        manifest.start(stage, fingerprint)
+        if notify:
+            notify(f"stage {stage} started")
+        schema = write()
+        written_at = time.time()
+        m = metrics()
+        manifest.commit(stage, fingerprint, path, m, schema, written_at)
+        if notify:
+            notify(f"stage {stage} finished rows={m.get('rows')}")
+    return read(manifest.stages[stage])
+
+
 def _write_stage(
     spark: SparkSession,
     manifest: StageManifest,
@@ -331,44 +363,43 @@ def _write_stage(
     extra_metrics_fn=None,
     notify=None,
 ) -> DataFrame:
-    """Run one stage with resume semantics; returns the materialized DF,
-    read back through ``read_stage`` with the written plan's schema."""
-    if manifest.done(stage, fingerprint):
-        return read_stage(spark, manifest.stages[stage])
-    manifest.start(stage, fingerprint)
-    if notify:
-        notify(f"stage {stage} started")
-    t0 = time.time()
-    df = _with_lineage(df_fn())
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    t1 = time.time()
-    metrics = _partition_metrics(spark, path)
-    if extra_metrics_fn is not None:
-        metrics.update(extra_metrics_fn() or {})
-    manifest.commit(stage, fingerprint, path, metrics, df.schema)
-    if notify:
-        notify(f"stage {stage} finished rows={metrics.get('rows')}")
-    if os.environ.get("PIPELINE_TIMING"):
-        print(f"[stage {stage}] write={t1 - t0:.2f}s metrics={time.time() - t1:.2f}s", flush=True)
-    return read_stage(spark, manifest.stages[stage])
+    """A parquet stage, flat or ``partition_by``-partitioned, through
+    ``_run_stage``; read back through ``read_stage`` with the written
+    plan's schema."""
+
+    def write():
+        df = _with_lineage(df_fn())
+        if sort_within:
+            df = df.sortWithinPartitions(*sort_within)
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
+        return df.schema
+
+    def metrics():
+        m = _partition_metrics(spark, path)
+        if extra_metrics_fn is not None:
+            m.update(extra_metrics_fn() or {})
+        return m
+
+    return _run_stage(
+        manifest, stage, fingerprint, path, write, metrics,
+        functools.partial(read_stage, spark), notify,
+    )
 
 
 def _ensure_bucketed_table(
     spark: SparkSession, table: str, entry: dict,
     buckets: int, bucket_col: str,
 ) -> None:
-    """Re-register an already-written bucketed layout with the session
-    catalog (resume path / new session: the default in-memory catalog
-    loses table metadata between sessions, but the bucket ids are encoded
-    in the parquet file names, so a CREATE TABLE with the matching
-    CLUSTERED BY spec restores exchange-free join planning — the same
-    re-attach Iceberg does from its own metadata).  The columns come from
-    the manifest entry's recorded schema (no Spark job)."""
+    """Register a written bucketed layout with the session catalog when
+    it is not there (resume path / new session: the default in-memory
+    catalog loses table metadata between sessions, but the bucket ids are
+    encoded in the parquet file names, so a CREATE TABLE with the
+    matching CLUSTERED BY spec restores exchange-free join planning — the
+    same re-attach Iceberg does from its own metadata).  The columns come
+    from the manifest entry's recorded schema (no Spark job)."""
     if spark.catalog.tableExists(table):
         return
     fields = read_stage(spark, entry).schema.fields
@@ -393,47 +424,37 @@ def _write_stage_bucketed(
     bucket_col: str = "id_num",
     notify=None,
 ) -> DataFrame:
-    """``_write_stage`` with the PDS-role bucketed layout (SURVEY.md §1.4,
-    PDS.pm:136-150): hash-bucketed + sorted on ``bucket_col``, registered
-    in the catalog so a point-lookup or co-located join plans with NO
+    """A stage in the PDS-role bucketed layout (SURVEY.md §1.4,
+    PDS.pm:136-150) through ``_run_stage``: ``write_bucketed``
+    hash-buckets and sorts on ``bucket_col`` and registers ``table`` in
+    the catalog, so a point-lookup or co-located join plans with NO
     Exchange on this side.  The pre-write shuffle is keyed on the bucket
     id itself (``pmod(hash(col), buckets)``, the bucket spec's Murmur3
     expression) into ``min(buckets, task slots)`` partitions: each task
     holds whole buckets, so every bucket is still exactly one file, and
     the write runs one task per slot instead of one per bucket (64
-    near-empty tasks at small volume).  ``_part_id`` is the bucket id."""
-    if manifest.done(stage, fingerprint):
-        _ensure_bucketed_table(
-            spark, table, manifest.stages[stage], buckets, bucket_col
+    near-empty tasks at small volume).  ``_part_id`` is the bucket id.
+    Fresh and resumed passes read ``spark.table(table)`` after
+    ``_ensure_bucketed_table``."""
+
+    def write():
+        bucket_id = F.pmod(F.hash(F.col(bucket_col)), F.lit(buckets))
+        slots = spark.sparkContext.defaultParallelism
+        df = df_fn().withColumn("_part_id", bucket_id).repartition(
+            min(buckets, slots), F.col("_part_id")
         )
+        write_bucketed(df, table, buckets, bucket_col, path=path)
+        return df.schema
+
+    def read(entry):
+        _ensure_bucketed_table(spark, table, entry, buckets, bucket_col)
         return spark.table(table)
-    manifest.start(stage, fingerprint)
-    if notify:
-        notify(f"stage {stage} started")
-    t0 = time.time()
-    bucket_id = F.pmod(F.hash(F.col(bucket_col)), F.lit(buckets))
-    slots = spark.sparkContext.defaultParallelism
-    df = df_fn().withColumn("_part_id", bucket_id).repartition(
-        min(buckets, slots), F.col("_part_id")
+
+    return _run_stage(
+        manifest, stage, fingerprint, path, write,
+        lambda: dict(_partition_metrics(spark, path), buckets=buckets, table=table),
+        read, notify,
     )
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .saveAsTable(table)
-    )
-    t1 = time.time()
-    metrics = _partition_metrics(spark, path)
-    metrics["buckets"] = buckets
-    metrics["table"] = table
-    manifest.commit(stage, fingerprint, path, metrics, df.schema)
-    if notify:
-        notify(f"stage {stage} finished rows={metrics.get('rows')}")
-    if os.environ.get("PIPELINE_TIMING"):
-        print(f"[stage {stage}] write={t1 - t0:.2f}s metrics={time.time() - t1:.2f}s", flush=True)
-    return spark.table(table)
 
 
 def run_pipeline(
@@ -467,7 +488,10 @@ def run_pipeline(
     ``stop_file``: St7 graceful stop — when the file appears, the run
     drains the stage group in flight (its snapshots COMMIT atomically)
     and raises ``GracefulStop``; a re-run with the same fingerprint
-    resumes from the manifest (wdq1.pl:142-143, 468 SIGINT model).
+    resumes from the manifest (wdq1.pl:142-143, 468 SIGINT model).  The
+    file is checked between stage groups on every slot count: after
+    extract, after triples/items/props/mentions, after canonical + nodes
+    and before each optional stage.  Only the first check has a test.
 
     ``notifier``: St9 lifecycle announcements (plans.notify.Notifier or
     any callable) — run started/finished, per-stage started/finished,
@@ -554,12 +578,12 @@ def run_pipeline(
     if export_rdf:
         stage_names.append("rdf_ntriples")
     man.plan(stage_names, fp)
-    # Three jobs read the alias table (extract: the collect gate's count and
-    # the collect; mentions: the linking broadcast).  A lazy local
-    # checkpoint runs its lineage once per pass (a computed input, such
-    # as a parquet read, is not re-scanned by each job; a local Arrow
-    # table is already a JVM-side scan), and only a running stage makes
-    # it, so a fully resumed pass never evaluates the input.
+    # Two jobs read the alias table (extract: the gated collect; mentions:
+    # the linking broadcast).  A lazy local checkpoint runs its lineage
+    # once per pass (a computed input, such as a parquet read, is not
+    # re-scanned by each job; a local Arrow table is already a JVM-side
+    # scan), and only a running stage makes it, so a fully resumed pass
+    # never evaluates the input.
     aliases_once = functools.cache(lambda: aliases.localCheckpoint(eager=False))
     p = lambda name: os.path.join(out_dir, name)
     notify = notifier if callable(notifier) else (lambda msg: None)
@@ -592,8 +616,12 @@ def run_pipeline(
     # Concurrency scales with task slots: with 1-2 slots, interleaving
     # 4 Arrow-exchange jobs through the same Python worker adds overhead
     # (and exercises a Spark 4.1 local-mode runner race) for zero overlap
-    # benefit, so the pool degrades to sequential.
+    # benefit, so every stage group's pool degrades to one lane.
     slots = spark.sparkContext.defaultParallelism
+
+    def lanes(n_jobs):
+        return max(1, min(n_jobs, slots // 2))
+
     # Writer-salt width scales with DATA VOLUME (from the extract stage's
     # manifest row count — free, works on resume), capped by task slots:
     # ~25k pages per salt.  Volume-scaled, not slots-scaled: at small
@@ -613,10 +641,8 @@ def run_pipeline(
         salt = F.pmod(F.xxhash64("subj"), F.lit(n_salts))
         return df.repartition(slots, F.col("pred"), salt)
 
-    # one slot per submitted job (4 stages + CC remap + optional curate),
-    # still degrading to sequential at low task-slot counts (see above)
-    n_jobs = 5 + (1 if curate else 0)
-    with ThreadPoolExecutor(max_workers=max(1, min(n_jobs, slots // 2))) as pool:
+    # one lane per submitted job (4 stages + CC remap + optional curate)
+    with ThreadPoolExecutor(max_workers=lanes(5 + (1 if curate else 0))) as pool:
         f_triples = pool.submit(
             _write_stage, spark, man, "triples", fp,
             lambda: by_pred_salted(TR.extract_triples(parsed)),
@@ -714,9 +740,7 @@ def run_pipeline(
             # count once (materializes the checkpoint), reuse for the
             # broadcast size gate AND the manifest metrics
             n = r.count()
-            if os.environ.get("PIPELINE_TIMING"):
-                print(f"[canonical] cc_loop={time.time() - t0:.2f}s", flush=True)
-            return r, n
+            return r, n, time.time() - t0
 
         f_remap = (
             pool.submit(_remap_job) if not man.done("canonical", fp) else None
@@ -726,7 +750,9 @@ def run_pipeline(
         props = f_props.result()
         linked = f_linked.result()
         docs_curated = f_curate.result() if f_curate is not None else None
-        remap, n_remap = f_remap.result() if f_remap is not None else (None, None)
+        remap, n_remap, cc_loop_s = (
+            f_remap.result() if f_remap is not None else (None, None, None)
+        )
 
     _stop_check()
 
@@ -740,71 +766,47 @@ def run_pipeline(
             rewrite_triples(_all_triples(), remap, remap_count=n_remap)
         )
 
-    def _nodes_from(canonical_df):
-        def go():
-            base = items.drop("_part_id")
-            if remap is not None:
-                # canonical node set = items appearing as subjects, minus
-                # the merge losers.  distinct() BEFORE the semi-join
-                # matters: the partial (map-side) aggregation collapses
-                # the subject column to ~#items rows before the exchange;
-                # the anti-join against the merge-bounded remap stays
-                # unhinted (planner broadcasts it when small, same
-                # discipline as rewrite_triples).
-                subj_ids = _all_triples().select(F.col("subj").alias("id")).distinct()
-                merged = base.join(subj_ids, "id", "left_semi").join(
-                    remap.select("id"), "id", "left_anti"
-                )
-            else:  # resume path: canonical stage was skipped, use its output
-                cmap_ids = canonical_df.select(F.col("subj").alias("id")).distinct()
-                merged = base.join(cmap_ids, "id", "left_semi")
-            return merged
+    def _nodes():
+        base = items.drop("_part_id")
+        if remap is None:
+            # canonical was committed before this pass: its snapshot holds
+            # the canonical subjects
+            ids = read_stage(spark, man.stages["canonical"]).select(
+                F.col("subj").alias("id")
+            ).distinct()
+            return base.join(ids, "id", "left_semi")
+        # canonical node set = items appearing as subjects, minus the
+        # merge losers.  distinct() BEFORE the semi-join matters: the
+        # partial (map-side) aggregation collapses the subject column to
+        # ~#items rows before the exchange; the anti-join against the
+        # merge-bounded remap stays unhinted (planner broadcasts it when
+        # small, same discipline as rewrite_triples).
+        subj_ids = _all_triples().select(F.col("subj").alias("id")).distinct()
+        return base.join(subj_ids, "id", "left_semi").join(
+            remap.select("id"), "id", "left_anti"
+        )
 
-        return go
-
-    canonical_kw = dict(
-        partition_by=["pred"],
-        sort_within=["subj"],
-        extra_metrics_fn=lambda: (
-            {"remap_rows": n_remap} if n_remap is not None else {}
-        ),
-        notify=notify,
-    )
     # catalog identity for the bucketed nodes table: stable per out_dir
     # (re-runs of the same pipeline overwrite it; concurrent pipelines in
     # one session get distinct names)
     nodes_table = "kg_nodes_" + hashlib.md5(
         os.path.abspath(out_dir).encode()
     ).hexdigest()[:10]
-    nodes_kw = dict(
-        table=nodes_table, buckets=node_buckets, bucket_col="id_num",
-        notify=notify,
-    )
-    if remap is not None and slots >= 4:
-        # The canonical rewrite+write was the pipeline's serial tail
-        # (~11 s alone at 8 cores on 800k pages while nodes waited
-        # ~4 s more); overlapping the two independent writes removes it.
-        with ThreadPoolExecutor(max_workers=2) as pool2:
-            f_cano = pool2.submit(
-                _write_stage, spark, man, "canonical", fp,
-                _canonical, p("canonical_triples"), **canonical_kw,
-            )
-            f_nodes = pool2.submit(
-                _write_stage_bucketed, spark, man, "nodes", fp,
-                _nodes_from(None), p("nodes"), **nodes_kw,
-            )
-            canonical_triples = f_cano.result()
-            nodes = f_nodes.result()
-    else:
-        canonical_triples = _write_stage(
-            spark, man, "canonical", fp,
-            _canonical, p("canonical_triples"), **canonical_kw,
+    # The canonical rewrite+write was the pipeline's serial tail (~11 s
+    # alone at 8 cores on 800k pages while nodes waited ~4 s more);
+    # overlapping the two independent writes removes it.
+    with ThreadPoolExecutor(max_workers=lanes(2)) as pool:
+        f_cano = pool.submit(
+            _write_stage, spark, man, "canonical", fp, _canonical,
+            p("canonical_triples"), ["pred"], ["subj"],
+            lambda: {"remap_rows": n_remap, "cc_loop_s": cc_loop_s}, notify,
         )
-        _stop_check()
-        nodes = _write_stage_bucketed(
-            spark, man, "nodes", fp, _nodes_from(canonical_triples),
-            p("nodes"), **nodes_kw,
+        f_nodes = pool.submit(
+            _write_stage_bucketed, spark, man, "nodes", fp, _nodes, p("nodes"),
+            nodes_table, node_buckets, "id_num", notify,
         )
+        canonical_triples = f_cano.result()
+        nodes = f_nodes.result()
 
     tbs = None
     if triples_by_subj:
@@ -878,32 +880,32 @@ def run_pipeline(
         # is one bounded job over the SOURCE parquet (the exported
         # non-null triple count), and bytes come from the same Hadoop-FS
         # listing the parquet stages use (suffix .gz).
-        stage, rpath = "rdf_ntriples", p("rdf_ntriples")
-        if man.done(stage, fp):
-            rdf_lines = spark.read.text(
-                man.stages[stage]["path"]
-            ).withColumnRenamed("value", "line")
-        else:
-            from ..functions.rdf import write_ntriples
+        from ..functions.rdf import write_ntriples
 
-            man.start(stage, fp)
-            notify(f"stage {stage} started")
-            write_ntriples(canonical_triples, rpath)
+        rpath = p("rdf_ntriples")
+
+        def _rdf_metrics():
             n_rows = canonical_triples.filter(
                 F.col("subj").isNotNull()
                 & F.col("pred").isNotNull()
                 & F.col("obj").isNotNull()
             ).count()
             _, _, gz_files = _list_stage_files(spark, rpath, suffix=".gz")
-            man.commit(stage, fp, rpath, {
+            return {
                 "rows": n_rows,
                 "bytes": sum(b for _, b in gz_files),
                 "files": len(gz_files),
-            })
-            notify(f"stage {stage} finished rows={n_rows}")
-            rdf_lines = spark.read.text(rpath).withColumnRenamed(
+            }
+
+        rdf_lines = _run_stage(
+            man, "rdf_ntriples", fp, rpath,
+            lambda: write_ntriples(canonical_triples, rpath),
+            _rdf_metrics,
+            lambda entry: spark.read.text(entry["path"]).withColumnRenamed(
                 "value", "line"
-            )
+            ),
+            notify,
+        )
 
     notify(f"pipeline finished stages={man.committed()}")
     out = {
