@@ -13,6 +13,7 @@ from wikidata_dump_processor_spark.operators.canonicalize import (
 )
 from wikidata_dump_processor_spark.operators.linking import (
     link_mentions,
+    resolve_surfaces,
     unlinked_mentions,
 )
 from wikidata_dump_processor_spark.operators.mentions import AhoCorasick, detect_mentions
@@ -77,6 +78,33 @@ def test_link_mentions_salted_equals_broadcast(corpus, spark):
     a = link_mentions(mentions, aliases, catalog, broadcast=True)
     b = link_mentions(mentions, aliases, catalog, broadcast=False)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_parquet_catalog_is_not_forced_to_broadcast(spark, tmp_path):
+    """The entity catalog is unbounded, so its join carries no broadcast
+    hint: with auto-broadcast off, a parquet catalog is not broadcast, and
+    the per-surface winners equal those of the broadcast Arrow catalog."""
+    aliases = datagen.gen_aliases(spark)
+    catalog = datagen.gen_entity_catalog(spark)
+    want = sorted(map(tuple, resolve_surfaces(aliases, catalog).collect()))
+    cat_dir = str(tmp_path / "catalog")
+    catalog.write.parquet(cat_dir)
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        best = resolve_surfaces(aliases, spark.read.parquet(cat_dir))
+        got = sorted(map(tuple, best.collect()))
+        plan = best._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert "Broadcast" not in plan, plan[:3000]
+    assert got and got == want
 
 
 def test_unlinked_anti_join(spark):

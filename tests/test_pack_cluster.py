@@ -1,13 +1,6 @@
-"""near_dup_clusters and pack_sequences vs independent Python oracles."""
-
-import pytest
-from pyspark.sql import functions as F
+"""near_dup_clusters vs an independent Python oracle."""
 
 from wikidata_dump_processor_spark.operators import dedup as D
-from wikidata_dump_processor_spark.operators.pack import pack_sequences, pack_stats
-from wikidata_dump_processor_spark.xxh64 import spark_xxhash64
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 # --------------------------- near-dup clustering ---------------------------
@@ -69,105 +62,6 @@ def test_near_dup_clusters_transitive(spark):
     assert out[1][0] == out[2][0] == out[3][0] == 1
     assert out[10][0] == out[11][0] == 10
     assert out[20] == (20, True)
-
-
-# ----------------------------- sequence packing ----------------------------
-
-
-def _py_pack(rows, budget, n_buckets):
-    """Independent re-derivation: bucket by spark_xxhash64(id) mod, order
-    by id, cumsum spans, explode chunk overlaps."""
-    by_bucket = {}
-    for doc_id, toks in rows:
-        if toks <= 0:
-            continue
-        b = spark_xxhash64(("long", doc_id)) % n_buckets  # pmod semantics
-        by_bucket.setdefault(b, []).append((doc_id, toks))
-    out = set()
-    for b, lst in by_bucket.items():
-        pos = 0
-        for doc_id, toks in sorted(lst):
-            start, end = pos, pos + toks
-            pos = end
-            for chunk in range(start // budget, (end - 1) // budget + 1):
-                base = chunk * budget
-                seg_start = max(start, base)
-                out.add((
-                    doc_id,
-                    f"{b}-{chunk}",
-                    seg_start - base,
-                    min(end, base + budget) - base,
-                    seg_start - start,
-                ))
-    return out
-
-
-@pytest.fixture(scope="module")
-def sf_docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-def test_pack_sequences_matches_python_oracle(spark, sf_docs):
-    budget, n_buckets = 256, 8
-    packed = pack_sequences(sf_docs, budget, n_buckets=n_buckets)
-    got = {
-        (r.doc_id, r.pack_id, r.pack_start, r.pack_end, r.doc_offset)
-        for r in packed.collect()
-    }
-    from wikidata_dump_processor_spark.operators.textstats import token_count
-
-    rows = [
-        (r.doc_id, r.n)
-        for r in sf_docs.select(
-            "doc_id", token_count(F.col("text")).alias("n")
-        ).collect()
-    ]
-    assert got == _py_pack(rows, budget, n_buckets)
-    assert len(got) > 0
-
-
-def test_pack_invariants(spark, sf_docs):
-    budget, n_buckets = 512, 4
-    packed = pack_sequences(sf_docs, budget, n_buckets=n_buckets).cache()
-    # every pack except each bucket's last is filled to exactly `budget`
-    fills = packed.groupBy("pack_id").agg(
-        F.sum(F.col("pack_end") - F.col("pack_start")).alias("fill")
-    )
-    with_bucket = fills.withColumn(
-        "bucket", F.split("pack_id", "-")[0].cast("long")
-    ).withColumn("chunk", F.split("pack_id", "-")[1].cast("long"))
-    last = with_bucket.groupBy("bucket").agg(F.max("chunk").alias("chunk"))
-    not_last = with_bucket.join(last, ["bucket", "chunk"], "left_anti")
-    bad = not_last.filter(F.col("fill") != budget).count()
-    assert bad == 0
-    # segments tile each pack without gaps or overlap: sorted starts/ends
-    # chain exactly (min start 0, contiguous)
-    seg = packed.groupBy("pack_id").agg(
-        F.min("pack_start").alias("mn"),
-        F.sum(F.col("pack_end") - F.col("pack_start")).alias("covered"),
-        F.max("pack_end").alias("mx"),
-    )
-    assert seg.filter(
-        (F.col("mn") != 0) | (F.col("covered") != F.col("mx"))
-    ).count() == 0
-    # total packed tokens == total corpus tokens (nothing lost or doubled)
-    from wikidata_dump_processor_spark.operators.textstats import token_count
-
-    total = sf_docs.select(
-        F.sum(token_count(F.col("text"))).alias("t")
-    ).first().t
-    packed_total = packed.select(
-        F.sum(F.col("pack_end") - F.col("pack_start")).alias("t")
-    ).first().t
-    assert packed_total == total
-    stats = pack_stats(packed, budget).first()
-    assert stats.n_packs == fills.count()
-    assert stats.underfull_packs <= n_buckets  # only bucket tails
-
-
-def test_pack_rejects_bad_budget(spark, sf_docs):
-    with pytest.raises(ValueError):
-        pack_sequences(sf_docs, 0)
 
 
 def test_curate_near_dup_clusters_policy(spark):

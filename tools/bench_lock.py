@@ -37,10 +37,9 @@ import time
 
 LOCK_PATH = os.environ.get("BENCH_LOCK_PATH", "/tmp/wdp_spark_bench.lock")
 # every lock-taking measurement entrypoint — a JVM whose ancestry carries
-# none of these is foreign.  volume_curate.py was missing (r7): its own
-# child JVM self-flagged as foreign, making every volume artifact carry a
-# false concurrent_spark_detected verdict.
-_BENCH_MARKERS = ("bench.py", "scaling_bench.py", "volume_curate.py")
+# none of these is foreign (a missing marker makes the entrypoint's own
+# child JVM flag itself as foreign)
+_BENCH_MARKERS = ("bench.py", "scaling_bench.py")
 
 # module-level so the fd (and with it the flock) lives for the process
 _LOCK_FH = None

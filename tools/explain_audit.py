@@ -14,7 +14,10 @@ from __future__ import annotations
 
 import io
 import os
+import re
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -47,6 +50,16 @@ AUDITS = {
 }
 
 
+def _fence(plan: str, limit: int, tmp: str) -> str:
+    """A plan dump as a fenced block, without the tokens that change on
+    every run: expression ids (``#29707``), plan ids, the scratch root and
+    the run's table-name hash.  A regeneration then diffs only where a
+    plan changed."""
+    plan = re.sub(r"#\d+L?|,? \[plan_id=\d+\]", "", plan.replace(tmp, "<tmp>"))
+    plan = re.sub(r"\b(kg_\w+?)_[0-9a-f]{10}\b", r"\1_<run>", plan)
+    return "\n```\n" + plan.strip()[:limit] + "\n```\n"
+
+
 def main():
     import __spark_entry__ as E
     from wikidata_dump_processor_spark.session import get_spark
@@ -64,6 +77,7 @@ def main():
            "Assertions checked (see AUDITS in the tool): filter pushdown,",
            "column pruning, broadcast joins, whole-stage codegen.", ""]
     failures = []
+    tmp = tempfile.mkdtemp(prefix="explain_audit_")
     for name, checks in AUDITS.items():
         df = qs[name](spark, SF_DIR)
         df.collect()  # execute THIS plan so AQE finalizes it (codegen stars)
@@ -78,7 +92,7 @@ def main():
             out.append(f"- {'PASS' if ok else 'FAIL'}: `{sub}` — {why}")
             if not ok:
                 failures.append((name, sub))
-        out.append("\n```\n" + plan.strip()[:6000] + "\n```\n")
+        out.append(_fence(plan, 6000, tmp))
 
     # KG pipeline: the linking join must be broadcast (no exchange of the
     # mention stream), the claim-triple filter-bank join broadcast, the
@@ -99,9 +113,7 @@ def main():
 
     # parquet-backed pages (the input_hint shape) so the plan audit sees
     # the production scan, not datagen's generator MapInPandas
-    import tempfile
-
-    pdir = tempfile.mkdtemp(prefix="explain_pages_")
+    pdir = os.path.join(tmp, "pages")
     datagen.gen_pages(spark, 200).write.mode("overwrite").parquet(pdir)
     pages = spark.read.parquet(pdir)
     aliases = datagen.gen_aliases(spark)
@@ -125,7 +137,6 @@ def main():
             ("Scan ExistingRDD", "filter bank is an Arrow LocalTableScan, not a Python-RDD scan", False),
         ],
         "kg_linking": [
-            ("BroadcastHashJoin", "surface winners broadcast — mention stream never shuffled", True),
             ("Scan ExistingRDD", "aliases and catalog are Arrow LocalTableScans, not Python-RDD scans", False),
         ],
         "kg_inverted_index_stats": [
@@ -147,6 +158,18 @@ def main():
             out.append(f"- {'PASS' if ok else 'FAIL'}: `{sub}`{neg} — {why}")
             if not ok:
                 failures.append((name, sub))
+        if name == "kg_linking":
+            # the tree section only: formatted mode repeats each node below
+            n_bhj = plan.split("\n\n")[0].count("BroadcastHashJoin")
+            ok = n_bhj == 2
+            out.append(
+                f"- {'PASS' if ok else 'FAIL'}: two BroadcastHashJoins (found "
+                f"{n_bhj}) — surface winners broadcast, so the mention stream "
+                "is never shuffled, and the small driver-built catalog "
+                "broadcasts by Spark's size rule (no hint)"
+            )
+            if not ok:
+                failures.append((name, "two BroadcastHashJoins"))
         if name == "kg_fused_stage1":
             simple = plan.split("== Physical Plan ==")[-1]
             n_py = simple.count("MapInPandas")
@@ -157,7 +180,7 @@ def main():
             )
             if not ok:
                 failures.append((name, "single MapInPandas"))
-        out.append("\n```\n" + plan.strip()[:6000] + "\n```\n")
+        out.append(_fence(plan, 6000, tmp))
 
     # Downstream column pruning over the MATERIALIZED extract snapshot:
     # the pipeline's widest column (text) is written once by stage 1 and
@@ -166,7 +189,7 @@ def main():
     # property; on one box every redundant byte re-read shares one bus).
     from wikidata_dump_processor_spark.operators.triples import items_table
 
-    edir = tempfile.mkdtemp(prefix="explain_extract_")
+    edir = os.path.join(tmp, "extract")
     fused.write.mode("overwrite").parquet(edir)
     parsed = spark.read.parquet(edir)
     downstream = {
@@ -202,7 +225,7 @@ def main():
 
     from wikidata_dump_processor_spark.plans.pipeline import run_pipeline
 
-    ndir = tempfile.mkdtemp(prefix="explain_kg_")
+    ndir = os.path.join(tmp, "kg")
     res = run_pipeline(
         spark, pages, aliases, ndir,
         datagen.gen_entity_catalog(spark), fingerprint="audit",
@@ -229,7 +252,7 @@ def main():
     )
     if not ok:
         failures.append(("kg_nodes_point_lookup", "no exchange on nodes side"))
-    out.append("\n```\n" + plan.strip()[:3000] + "\n```\n")
+    out.append(_fence(plan, 3000, tmp))
 
     # Co-located nodes ⋈ triples_by_subj (VERDICT r4 #3): both tables are
     # bucketed with the same count on the same long key domain (id_num /
@@ -249,7 +272,7 @@ def main():
     )
     if not ok:
         failures.append(("kg_nodes_triples_by_subj", "zero-exchange co-located join"))
-    out.append("\n```\n" + plan2.strip()[:3000] + "\n```\n")
+    out.append(_fence(plan2, 3000, tmp))
 
     # Label rendering (wdq2 labels mode, round 6; single-scan r7): the
     # attach_labels lookup must (a) scan the bucketed nodes table ONCE
@@ -310,7 +333,7 @@ def main():
     )
     if not ok:
         failures.append(("attach_labels", "single scan + no exchange on nodes side"))
-    out.append("\n```\n" + plan_lb.strip()[:2000] + "\n```\n")
+    out.append(_fence(plan_lb, 2000, tmp))
 
     # --- curation additions: PII pass is pure codegen; decontamination
     # broadcasts the benchmark and semi-joins (corpus never shuffled) ---
@@ -337,7 +360,7 @@ def main():
     )
     if not ok:
         failures.append(("pii", "no Python node in PII pass"))
-    out.append("\n```\n" + plan_pii.strip()[:1500] + "\n```\n")
+    out.append(_fence(plan_pii, 1500, tmp))
 
     bench_docs = docs01.limit(50).select("text")
     plan_dc = (
@@ -358,7 +381,7 @@ def main():
     )
     if not ok:
         failures.append(("decontam", "broadcast semi-join, no Python node"))
-    out.append("\n```\n" + plan_dc.strip()[:2000] + "\n```\n")
+    out.append(_fence(plan_dc, 2000, tmp))
 
     from wikidata_dump_processor_spark.operators.dedup import paragraph_dedup
 
@@ -376,7 +399,7 @@ def main():
     )
     if not ok:
         failures.append(("paragraph_dedup", "window-free drop_frequent plan"))
-    out.append("\n```\n" + plan_pd.strip()[:2000] + "\n```\n")
+    out.append(_fence(plan_pd, 2000, tmp))
 
     # URL canonicalization: a narrow JVM map (runs inside the consumer's
     # scan stage at 100 TB) — no Python node, no Exchange.
@@ -404,7 +427,7 @@ def main():
     )
     if not ok:
         failures.append(("canonical_url", "narrow JVM map, no exchange"))
-    out.append("\n```\n" + plan_cu.strip()[:1500] + "\n```\n")
+    out.append(_fence(plan_cu, 1500, tmp))
 
     # Domain-quota sampling, hash-Bernoulli 100-TB path: must be
     # window-free (the exact path's row_number serializes a mega-domain
@@ -424,7 +447,7 @@ def main():
     )
     if not ok:
         failures.append(("domain_quota", "window-free hash-Bernoulli plan"))
-    out.append("\n```\n" + plan_dq.strip()[:2000] + "\n```\n")
+    out.append(_fence(plan_dq, 2000, tmp))
 
     # k-hop frontier expansion: each hop joins the (small) frontier into
     # the triples table as a BROADCAST left-semi — the triples side is
@@ -449,32 +472,7 @@ def main():
     )
     if not ok:
         failures.append(("k_hop", "broadcast left-semi frontier probe"))
-    out.append("\n```\n" + plan_kh.strip()[:2000] + "\n```\n")
-
-    # Sequence packing: the whole pack plan is ONE bucket-hash exchange
-    # (the cumsum window) and zero Python nodes; with a precomputed
-    # token-count column the window reads only (id, count).
-    from wikidata_dump_processor_spark.operators.pack import pack_sequences
-
-    toks01 = docs01.withColumn("n_toks", F.size(F.split("text", r"\s+")))
-    plan_pk = (
-        pack_sequences(toks01, 512, token_count_col="n_toks")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    ok = (
-        plan_pk.count("Exchange") == 1
-        and "BatchEvalPython" not in plan_pk
-        and "MapInPandas" not in plan_pk
-    )
-    out.append("## sequence packing (operators/pack.py)\n")
-    out.append(
-        f"- {'PASS' if ok else 'FAIL'}: the pack plan is exactly ONE "
-        "bucket-hash Exchange (the cumsum window) with zero Python nodes "
-        "— spans and chunk membership are JVM sequence/explode"
-    )
-    if not ok:
-        failures.append(("pack_sequences", "one exchange, no Python node"))
-    out.append("\n```\n" + plan_pk.strip()[:2000] + "\n```\n")
+    out.append(_fence(plan_kh, 2000, tmp))
 
     # BGP pattern match: every pattern's constants must reach its
     # parquet scan as pushed filters (partition/row-group pruning is
@@ -482,7 +480,7 @@ def main():
     # whole query is scans + hash joins — zero Python nodes.
     from wikidata_dump_processor_spark.plans.bgp import match_patterns
 
-    tdir = tempfile.mkdtemp(prefix="explain_bgp_")
+    tdir = os.path.join(tmp, "bgp")
     triples.write.mode("overwrite").parquet(tdir)
     tpq = spark.read.parquet(tdir)
     bgp = match_patterns(
@@ -509,7 +507,7 @@ def main():
     )
     if not ok:
         failures.append(("bgp_match", "constants pushed, no Python node"))
-    out.append("\n```\n" + final_bg.strip()[:2000] + "\n```\n")
+    out.append(_fence(final_bg, 2000, tmp))
 
     # BGP MINUS: the negation group must plan as a real ANTI join
     # (broadcast or shuffled-hash — AQE's choice) over its own pushed
@@ -538,7 +536,7 @@ def main():
     )
     if not ok:
         failures.append(("bgp_minus", "anti join, pushed scan, no Python"))
-    out.append("\n```\n" + final_ng.strip()[:2000] + "\n```\n")
+    out.append(_fence(final_ng, 2000, tmp))
 
     # BGP stats-driven join order: fed the engine's own predicate_stats,
     # the planner must seed the join tree with the SELECTIVE pattern —
@@ -565,7 +563,7 @@ def main():
     )
     if not ok:
         failures.append(("bgp_stats_order", "selective pattern seeds tree"))
-    out.append("\n```\n" + opt_plan.strip()[:1200] + "\n```\n")
+    out.append(_fence(opt_plan, 1200, tmp))
 
     # PageRank iteration body: zero Python nodes and a bounded shuffle
     # count — one one-time edge repartition (cached, amortized across
@@ -618,7 +616,7 @@ def main():
     )
     if not ok:
         failures.append(("pagerank", "bounded exchanges, no Python node"))
-    out.append("\n```\n" + final_pr.strip()[:2000] + "\n```\n")
+    out.append(_fence(final_pr, 2000, tmp))
 
     # Property-path closure (the BGP P279+/P279* engine): the seeded
     # fixpoint walk must (a) push the predicate constant into the edge
@@ -658,7 +656,7 @@ def main():
     )
     if not ok:
         failures.append(("closure", "pushdown + broadcast semi, no Python"))
-    out.append("\n```\n" + final_cl.strip()[:2000] + "\n```\n")
+    out.append(_fence(final_cl, 2000, tmp))
 
     # N-Triples export: a 100 TB RDF dump must be a NARROW map over the
     # triples scan — zero Exchange, zero Python nodes (escaping is four
@@ -684,7 +682,7 @@ def main():
     )
     if not ok:
         failures.append(("ntriples", "narrow map, no Exchange, no Python"))
-    out.append("\n```\n" + final_nt.strip()[:1500] + "\n```\n")
+    out.append(_fence(final_nt, 1500, tmp))
 
     # Triangle counting: the degree-ordered wedge plan is joins +
     # aggregates only — zero Python nodes (the O(m^1.5) bound is a plan
@@ -710,10 +708,11 @@ def main():
     )
     if not ok:
         failures.append(("triangles", "no Python, no cartesian"))
-    out.append("\n```\n" + final_tc.strip()[:1500] + "\n```\n")
+    out.append(_fence(final_tc, 1500, tmp))
 
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out) + "\n")
+    shutil.rmtree(tmp, ignore_errors=True)
     print(f"EXPLAIN.md written; {len(failures)} failed checks")
     for name, sub in failures:
         print(f"  FAIL {name}: missing {sub}")

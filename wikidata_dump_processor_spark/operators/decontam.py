@@ -41,21 +41,9 @@ def _norm_tokens(text: Column) -> Column:
     return F.filter(F.split(cleaned, r"\s+"), lambda t: t != "")
 
 
-def ngram_hashes(text: Column, n: int = DEFAULT_NGRAM) -> Column:
-    """array<bigint> of xxhash64 over each n-token window of the
-    normalized text; empty when the text has fewer than ``n`` tokens.
-
-    Column-level form for composition.  The operators below do NOT call
-    this on the raw text column: referencing ``toks`` three times inside
-    one nested expression re-tokenizes the document per reference
-    (codegen CSE does not span the generate node), measured 7x slower at
-    sf0.1 — they stage the token array through ``_gram_rows``'s two-step
-    projection instead."""
-    toks = _norm_tokens(text)
-    return _grams_of(toks, n)
-
-
 def _grams_of(toks: Column, n: int) -> Column:
+    """array<bigint> of xxhash64 over each n-token window; empty when the
+    token array is shorter than ``n``."""
     starts = F.sequence(F.lit(1), F.size(toks) - (n - 1))
     grams = F.transform(
         starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n)))
@@ -70,7 +58,10 @@ def _gram_rows(
 ) -> DataFrame:
     """(*keep_cols, gram_hash) — one row per n-gram window.  Tokenizes
     ONCE per document (separate projection materializes the token
-    array before the gram transform + explode reference it)."""
+    array before the gram transform + explode reference it): the
+    tokenizer inlined into ``_grams_of`` re-tokenizes the document per
+    reference (codegen CSE does not span the generate node), measured
+    7x slower at sf0.1."""
     toks = df.select(*keep_cols, _norm_tokens(F.col(text_col)).alias("_toks"))
     return toks.select(
         *keep_cols, F.explode(_grams_of(F.col("_toks"), n)).alias("gram_hash")

@@ -11,7 +11,7 @@ Duplicate-key semantics in the reference are last-wins on hash overwrite
 Scale: the alias table is broadcast (dimension); mentions stream through a
 map-side join, so head-domain/mega-entity skew never concentrates a
 shuffle partition.  For alias tables too big to broadcast, use
-``link_mentions_salted`` (explicit salting, north_rule).
+``link_mentions(..., broadcast=False)`` (explicit salting, north_rule).
 """
 
 from __future__ import annotations
@@ -22,25 +22,18 @@ from pyspark.sql import functions as F
 from .skew import salted_join
 
 
-def _candidates(mentions: DataFrame, aliases: DataFrame, broadcast: bool) -> DataFrame:
-    al = aliases.select(
-        F.lower("alias").alias("surface"),
-        F.col("id").alias("qid"),
-        F.col("lang").alias("alias_lang"),
-        F.col("is_primary"),
-    )
-    if broadcast:
-        return mentions.join(F.broadcast(al), "surface")
-    return salted_join(mentions, al, on=["surface"], num_salts=8)
-
-
 def score_candidates(cand: DataFrame, catalog: DataFrame | None = None) -> DataFrame:
     """Score = primary-alias bonus + catalog popularity prior (if given).
-    Deterministic tie-break on qid."""
+    Deterministic tie-break on qid.
+
+    The catalog join carries no broadcast hint: the catalog is unbounded
+    (10^8 entities is a multi-GB table), so Spark's size rule picks the
+    strategy.  A driver-built catalog plans as a small ``LocalTableScan``
+    and still broadcasts; a large parquet catalog sort-merges."""
     c = cand.withColumn("score", F.when(F.col("is_primary"), 2.0).otherwise(0.0))
     if catalog is not None:
         pri = catalog.select(F.col("id").alias("qid"), F.col("prior"))
-        c = c.join(F.broadcast(pri), "qid", "left").withColumn(
+        c = c.join(pri, "qid", "left").withColumn(
             "score", F.col("score") + F.coalesce(F.log1p("prior"), F.lit(0.0))
         )
     return c

@@ -235,13 +235,9 @@ def _decode_image_stdlib(payload: bytes) -> dict:
 
 def _pick_decoder():
     """Tier order, decided inside the executor kernel where the work
-    runs: PIL when importable (and not forced off via
-    MULTIMODAL_FORCE_STUB=1), else the stdlib tier (real PNG decode,
-    stub for other formats), else — forced — the pure stub."""
-    import os
-
-    if os.environ.get("MULTIMODAL_FORCE_STUB") == "1":
-        return _decode_image_stub
+    runs: PIL when importable, else the stdlib tier (real PNG decode,
+    stub for other formats).  ``image_features(decoder="stub")`` pins
+    the pure stub."""
     try:
         import PIL.Image  # noqa: F401
 

@@ -29,11 +29,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    ca, cb = F.col(a), F.col(b)
-    return df.withColumn(out, _dot(ca, cb) / (_norm(ca) * _norm(cb)))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,

@@ -95,25 +95,19 @@ def get_spark(
         # level 3 costs ~1.6x the write wall for ~9% smaller files
         # (measured on the 100k-page extract stage: 2.75 s -> 1.76 s,
         # 37.5 -> 41.0 MB); snapshots are written once and re-read a
-        # handful of times, so write speed wins.  Deployment overrides
-        # via SPARK_GRAFT_ZSTD_LEVEL (e.g. archival tiers want 3+).
-        .config(
-            "spark.hadoop.parquet.compression.codec.zstd.level",
-            os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "1"),
-        )
+        # handful of times, so write speed wins.
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
         # Input split size (r7, guide §6): the bench ships each table as
         # ONE parquet file with ~1M-row (~20 MB) row groups, so the
         # default 128 MB splits leave a 130 MB fact-table scan at 1-2
         # tasks; 32 MB splits let every row group scan in its own task
         # (measured: a1 1.23 -> 1.09 s, w2 0.41 -> 0.31 s at 10x bench
-        # scale; pipeline unchanged).  Splits never cut INSIDE a row
-        # group, so this is row-group-granularity parallelism, not task
-        # spam.  Production deployments with many large files want
-        # 128 MB - 1 GB (guide §6) via SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
-        )
+        # scale).  Splits never cut INSIDE a row group.  The cap also
+        # splits the KG pass's reads of its many-file `pred=` stages one
+        # task finer (perfbench claim_skew: 112 pass tasks at 32m, 109 at
+        # the 128m default).  Deployments with many large files want
+        # 128 MB - 1 GB (guide §6) via get_spark(extra_conf=...).
+        .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem or _derived_driver_mem())
     )
