@@ -364,30 +364,49 @@ def _t_geonames(c: _Corpus, triples_rows):
     )
 
 
+def naive_mentions(surfaces, low: str) -> list[tuple[str, int, int]]:
+    """Dictionary mention scan of lowered text: word-bounded (neighbours
+    not ``str.isalnum()``), longest-leftmost, non-overlapping — a naive
+    position loop, independent of the engine's trie-regex kernel.
+    Returns (surface, begin, end) with offsets into ``low``; empty
+    surfaces are not in the dictionary."""
+    ordered = sorted({s for s in surfaces if s}, key=lambda s: (-len(s), s))
+    out = []
+    pos, L = 0, len(low)
+    while pos < L:
+        hit = None
+        if pos == 0 or not low[pos - 1].isalnum():
+            for s in ordered:
+                e = pos + len(s)
+                if low.startswith(s, pos) and (e >= L or not low[e].isalnum()):
+                    hit = (s, pos, e)
+                    break
+        if hit:
+            out.append(hit)
+            pos = hit[2]
+        else:
+            pos += 1
+    return out
+
+
+def stored_offsets(text: str, hits):
+    """(surface, begin, end) hits in ``text.lower()`` -> offsets into
+    ``text``: each lowered code point maps to the stored character it came
+    from, ``begin`` to that character and ``end`` past it."""
+    origin = [i for i, ch in enumerate(text) for _ in ch.lower()]
+    return [(s, origin[b], origin[e - 1] + 1) for s, b, e in hits]
+
+
 def _mention_rows(c: _Corpus):
-    """Dictionary mention scan: case-insensitive, word-bounded,
-    longest-leftmost, non-overlapping — naive position loop (independent
-    of the engine's compiled-alternation / Aho-Corasick kernels)."""
-    surfaces = sorted({a.lower() for a, _id, _lg, _p in datagen.alias_rows()}, key=lambda s: (-len(s), s))
+    """Dictionary mention rows of the corpus: ``naive_mentions`` over each
+    page's ``text.lower()``, with begin/end indexing the stored text."""
+    surfaces = {a.lower() for a, _id, _lg, _p in datagen.alias_rows()}
     rows = []
     for i, url, text, diag, j in c.pages:
         if not text:
             continue
-        low = text.lower()
-        pos, L = 0, len(low)
-        while pos < L:
-            hit = None
-            if pos == 0 or not low[pos - 1].isalnum():
-                for s in surfaces:
-                    e = pos + len(s)
-                    if low.startswith(s, pos) and (e >= L or not low[e].isalnum()):
-                        hit = (s, pos, e)
-                        break
-            if hit:
-                rows.append({"url": url, "surface": hit[0], "begin": hit[1], "end": hit[2]})
-                pos = hit[2]
-            else:
-                pos += 1
+        for s, b, e in stored_offsets(text, naive_mentions(surfaces, text.lower())):
+            rows.append({"url": url, "surface": s, "begin": b, "end": e})
     return rows
 
 

@@ -1,21 +1,25 @@
-"""Dictionary + alias-trie mention detection over page text.
+"""Dictionary mention detection over page text.
 
 Generalizes the reference's single hard-coded substring scan
-(wdq1.pl:391, 636-653 — 'Punivie') into a multi-pattern Aho-Corasick
-scan driven by the alias table (whose source model is the reference's
-labels/aliases export, wdq1.pl:171-174, 770-780).
+(wdq1.pl:391, 636-653 — 'Punivie') into a scan for every surface of the
+alias table (whose source model is the reference's labels/aliases export,
+wdq1.pl:171-174, 770-780).  Semantics, shared by every path and by
+``golden.naive_mentions``: surfaces are Spark's ``lower(alias)`` (the
+linking join key), text is lowered by ``str.lower``, a match's neighbours
+are not ``str.isalnum()``, matches are longest-leftmost non-overlapping,
+and ``begin``/``end`` index the stored text.
 
-Scale design: the automaton is built ONCE from the collected alias list
-and shipped to executors as a Spark broadcast variable; the scan runs as
-an Arrow-batched ``mapInPandas`` (north_rule: no per-row Python API).
-The alias table is a dimension (10^6-10^7 surfaces is fine to broadcast —
-tens of MB); page text is never shuffled.
+Kernel: one regex compiled from a character trie of the surfaces, so the
+whole scan runs inside ``re``'s C matcher and its cost per page does not
+grow with the dictionary.  The surface list is broadcast once; the scan
+runs as an Arrow-batched ``mapInPandas`` (north_rule: no per-row Python
+API).  The alias table is a dimension; page text is never shuffled.
 """
 
 from __future__ import annotations
 
 import re
-from collections import deque
+from bisect import bisect_left, bisect_right
 from collections.abc import Iterator
 from functools import reduce
 
@@ -25,84 +29,25 @@ from pyspark.sql import functions as F
 
 from ..schemas import MENTIONS_SCHEMA
 
-
-class AhoCorasick:
-    """Minimal deterministic Aho-Corasick automaton (word-boundary-aware
-    matching is applied by the caller).  Pure python, built driver-side
-    once; lookup is O(len(text))."""
-
-    def __init__(self, patterns: list[str]):
-        # goto/fail/output tables over a dict-based trie
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[str]] = [[]]
-        self.fail: list[int] = [0]
-        for pat in sorted(set(patterns)):
-            if not pat:
-                continue
-            node = 0
-            for ch in pat:
-                nxt = self.goto[node].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    self.fail.append(0)
-                    nxt = len(self.goto) - 1
-                    self.goto[node][ch] = nxt
-                node = nxt
-            self.out[node].append(pat)
-        # BFS failure links
-        q = deque()
-        for ch, nxt in self.goto[0].items():
-            self.fail[nxt] = 0
-            q.append(nxt)
-        while q:
-            r = q.popleft()
-            for ch, u in self.goto[r].items():
-                q.append(u)
-                f = self.fail[r]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[u] = self.goto[f].get(ch, 0) if self.goto[f].get(ch, 0) != u else 0
-                self.out[u] = self.out[u] + self.out[self.fail[u]]
-
-    def find(self, text: str) -> list[tuple[int, int, str]]:
-        """All (begin, end, pattern) matches."""
-        res = []
-        node = 0
-        for i, ch in enumerate(text):
-            while node and ch not in self.goto[node]:
-                node = self.fail[node]
-            node = self.goto[node].get(ch, 0)
-            for pat in self.out[node]:
-                res.append((i - len(pat) + 1, i + 1, pat))
-        return res
-
-
-def _word_bounded(text: str, b: int, e: int) -> bool:
-    before = text[b - 1] if b > 0 else " "
-    after = text[e] if e < len(text) else " "
-    return not before.isalnum() and not after.isalnum()
-
-
-# Above this many aliases, a single compiled alternation regex becomes
-# slow to compile / match; fall back to the Aho-Corasick automaton.
-REGEX_DICT_LIMIT = 5000
+# ``[^\W_]`` is exactly ``str.isalnum()`` (Python 3.11, every code point
+# checked): a match starts after and ends before no such character.
+_START = r"(?<![^\W_])"
+_END = r"(?![^\W_])"
 
 # Hard gate on the driver-side alias collect: ~50 bytes/surface means 2e7
-# aliases ≈ 1 GB of driver heap for the list + automaton.  Beyond that the
-# dictionary must be partitioned (shard the alias table, union the scans)
-# — fail loudly instead of silently OOMing the driver.
+# aliases ≈ 1 GB of driver heap for the list + the compiled scanner.
+# Beyond that the dictionary must be partitioned (shard the alias table,
+# union the scans) — fail loudly instead of silently OOMing the driver.
 MAX_BROADCAST_ALIASES = 20_000_000
 
 
-def _compiled_alternation(patterns: list[str]):
-    """Longest-first alternation with word boundaries: Python's regex engine
-    picks the first alternative that matches at a position, so sorting by
-    length desc gives longest-leftmost; non-overlap comes from finditer."""
-    ordered = sorted(set(patterns), key=lambda p: (-len(p), p))
-    return re.compile(
-        r"(?<![0-9A-Za-z])(" + "|".join(re.escape(p) for p in ordered) + r")(?![0-9A-Za-z])"
-    )
+def _alias_surfaces(aliases: DataFrame) -> DataFrame:
+    """The dictionary: one ``alias`` column of distinct surfaces.  Spark's
+    ``lower`` is the linking join key's (``linking.resolve_surfaces``), so
+    every surface the scan emits joins it; ``alias != ''`` is null for a
+    null alias, so the filter drops null and empty aliases alike."""
+    surface = F.lower("alias").alias("alias")
+    return aliases.select(surface).where(F.col("alias") != "").distinct()
 
 
 def broadcast_alias_list(aliases: DataFrame):
@@ -115,26 +60,23 @@ def broadcast_alias_list(aliases: DataFrame):
     first (``run_pipeline`` does), so its lineage runs once rather than
     once per job."""
     spark = aliases.sparkSession
-    rows = (
-        aliases.select("alias").distinct()
-        .limit(MAX_BROADCAST_ALIASES + 1).collect()
-    )
+    rows = _alias_surfaces(aliases).limit(MAX_BROADCAST_ALIASES + 1).collect()
     if len(rows) > MAX_BROADCAST_ALIASES:
         raise ValueError(
             f"alias dictionary has more than {MAX_BROADCAST_ALIASES} "
             "surfaces, over the driver-collect gate; the fused "
-            "extract_and_detect pass needs one automaton — pre-filter the "
+            "extract_and_detect pass needs one scanner — pre-filter the "
             "dictionary, or use detect_mentions, which shards automatically "
             "(k scan passes + one mention-stream resolution)"
         )
-    return spark.sparkContext.broadcast([r.alias.lower() for r in rows])
+    return spark.sparkContext.broadcast([r.alias for r in rows])
 
 
 def _resolve_matches(matches: list[tuple[int, int, str]]) -> list[tuple[str, int, int]]:
     """Longest-leftmost non-overlap resolution over raw (begin, end,
-    pattern) matches: sort by (begin, -len), drop overlaps.  Shared by
-    the single-dictionary kernel and the sharded-scan reducer — the SAME
-    function, so both paths resolve identically."""
+    pattern) matches: sort by (begin, -len), drop overlaps.  The
+    sharded-scan reducer runs it on the union of the shards' raw
+    matches."""
     matches.sort(key=lambda m: (m[0], -(m[1] - m[0])))
     out: list[tuple[str, int, int]] = []
     last_end = -1
@@ -146,34 +88,73 @@ def _resolve_matches(matches: list[tuple[int, int, str]]) -> list[tuple[str, int
     return out
 
 
-def make_scanner(
-    alias_list: list[str],
-    force_automaton: bool = False,
-    resolve: bool = True,
-):
-    """Executor-side scan kernel: lowercased text -> [(surface, begin,
-    end)].  Two kernels behind the same semantics (case-insensitive,
-    word-bounded, longest-leftmost non-overlapping): a compiled
-    alternation regex (C-speed, up to REGEX_DICT_LIMIT surfaces) and the
-    Aho-Corasick automaton (linear in text, for web-scale dictionaries).
+def _trie_pattern(surfaces: list[str]) -> str:
+    """A regex matching exactly ``surfaces``, factored by a character trie.
+    A node is its children's continuations; a node that ends a surface
+    wraps them in a greedy ``?``, so the longer continuation is tried
+    first and the first match found at a position is the longest.  The
+    string is built bottom-up from an explicit stack, so a deep trie is
+    not bounded by Python's recursion limit here."""
+    root: dict = {}
+    for s in surfaces:
+        node = root
+        for ch in s:
+            node = node.setdefault(ch, {})
+        node[""] = None  # a surface ends here (no character key is empty)
+    order, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        order.append(node)
+        stack.extend(child for ch, child in node.items() if ch)
+    pattern: dict[int, str] = {}
+    for node in reversed(order):
+        alts = [re.escape(ch) + pattern.pop(id(child)) for ch, child in node.items() if ch]
+        pat = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+        if "" in node:
+            pat = f"(?:{pat})?" if alts else ""
+        pattern[id(node)] = pat
+    return pattern[id(root)]
 
-    ``resolve=False`` (sharded mode): emit ALL word-bounded matches,
-    unresolved — the union of raw matches over dictionary shards equals
-    the raw-match set of the full dictionary, so overlap resolution must
-    run once, globally, after the union (a per-shard resolution could
-    drop matches differently than the full dictionary would).
-    """
-    use_regex = resolve and (not force_automaton) and len(alias_list) <= REGEX_DICT_LIMIT
-    rx = _compiled_alternation(alias_list) if use_regex else None
-    ac = None if use_regex else AhoCorasick(alias_list)
 
-    def scan(low: str) -> list[tuple[str, int, int]]:
-        if rx is not None:
-            return [(m.group(1), m.start(1), m.end(1)) for m in rx.finditer(low)]
-        matches = [(b, e, p) for b, e, p in ac.find(low) if _word_bounded(low, b, e)]
-        if not resolve:
-            return [(p, b, e) for b, e, p in matches]
-        return _resolve_matches(matches)
+def _stored_offsets(text: str, hits: list[tuple[str, int, int]]) -> list[tuple[str, int, int]]:
+    """Map offsets into ``text.lower()`` back to ``text``.  ``İ`` (U+0130)
+    is the only code point whose lowercase is longer: two code points, the
+    second at ``dots``; an offset moves back by one per dot before it."""
+    dots = [m.start() + k + 1 for k, m in enumerate(re.finditer("İ", text))]
+    return [(s, b - bisect_right(dots, b), e - bisect_left(dots, e)) for s, b, e in hits]
+
+
+def make_scanner(alias_list: list[str], resolve: bool = True):
+    """Executor-side scan kernel: stored text -> [(surface, begin, end)]
+    under the module's semantics, in one ``finditer`` of the trie regex.
+
+    ``resolve=False`` (sharded mode): the same regex inside a lookahead
+    emits the longest bounded match at EVERY start position, overlaps
+    included.  The union of these over dictionary shards holds the
+    longest match at each position of the full dictionary, so overlap
+    resolution runs once, globally, after the union (a per-shard
+    resolution could drop matches differently than the full dictionary
+    would).
+
+    Raises ``ValueError`` when ``re`` cannot compile the dictionary: a
+    chain of a few hundred prefix surfaces (``a``, ``a a``, ``a a a``, …)
+    nests the regex past its compiler's recursion limit."""
+    if not alias_list:
+        return lambda text: []
+    body = _trie_pattern(alias_list)
+    try:
+        rx = re.compile(
+            f"{_START}({body}){_END}" if resolve else f"{_START}(?=({body}){_END})"
+        )
+    except RecursionError:
+        raise ValueError(
+            "alias dictionary nests too deep for re to compile (RecursionError): "
+            "a long chain of surfaces that are prefixes of each other"
+        ) from None
+
+    def scan(text: str) -> list[tuple[str, int, int]]:
+        hits = [(m.group(1), m.start(1), m.end(1)) for m in rx.finditer(text.lower())]
+        return _stored_offsets(text, hits) if hits and "İ" in text else hits
 
     return scan
 
@@ -182,19 +163,18 @@ def _scan_df(
     pages_text: DataFrame,
     bc,
     text_col: str,
-    force_automaton: bool,
     resolve: bool,
 ) -> DataFrame:
     """One mapInPandas scan pass with a broadcast dictionary."""
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kern = make_scanner(bc.value, force_automaton, resolve=resolve)
+        kern = make_scanner(bc.value, resolve=resolve)
         for pdf in batches:
             urls, surfaces, begins, ends = [], [], [], []
             for url, text in zip(pdf["url"], pdf[text_col]):
                 if not isinstance(text, str) or not text:
                     continue
-                for s, b, e in kern(text.lower()):
+                for s, b, e in kern(text):
                     urls.append(url)
                     surfaces.append(s)
                     begins.append(b)
@@ -227,7 +207,6 @@ def detect_mentions(
     pages_text: DataFrame,
     aliases: DataFrame,
     text_col: str = "text",
-    force_automaton: bool = False,
 ) -> DataFrame:
     """(url, text) x alias dictionary -> (url, surface, begin, end).
 
@@ -239,10 +218,10 @@ def detect_mentions(
     Dictionaries over ``MAX_BROADCAST_ALIASES`` distinct surfaces shard
     automatically: the dictionary is hash-partitioned into
     ceil(n/gate) shards, each shard scans the corpus with its own
-    broadcast automaton emitting RAW word-bounded matches (the raw-match
-    union over shards IS the raw-match set of the full dictionary), and
-    one keyed applyInPandas pass re-applies the longest-leftmost
-    resolution per url — byte-identical output to the unsharded scan.
+    broadcast dictionary emitting the longest bounded match at every
+    position (``make_scanner(..., resolve=False)``), and one keyed
+    applyInPandas pass re-applies the longest-leftmost resolution per url
+    to their union — byte-identical output to the unsharded scan.
     Cost: k corpus scans plus ONE shuffle of the mention stream (the
     bounded mentions, never the text) — the price of a dictionary too
     large for a single executor heap.
@@ -251,9 +230,7 @@ def detect_mentions(
     # persist: the count + every per-shard collect below re-reads this
     # distinct — without it a 20M-surface dictionary pays k+1 full
     # aggregation jobs over the alias table
-    distinct = (
-        aliases.select(F.lower(F.col("alias")).alias("alias")).distinct().persist()
-    )
+    distinct = _alias_surfaces(aliases).persist()
     n_aliases = distinct.count()
     n_shards = max(1, -(-n_aliases // MAX_BROADCAST_ALIASES))
     try:
@@ -261,7 +238,7 @@ def detect_mentions(
             bc = spark.sparkContext.broadcast(
                 [r.alias for r in distinct.collect()]
             )
-            return _scan_df(pages_text, bc, text_col, force_automaton, resolve=True)
+            return _scan_df(pages_text, bc, text_col, resolve=True)
         shard_scans = []
         for i in range(n_shards):
             shard = [
@@ -273,7 +250,7 @@ def detect_mentions(
             if not shard:
                 continue
             bc = spark.sparkContext.broadcast(shard)
-            shard_scans.append(_scan_df(pages_text, bc, text_col, True, resolve=False))
+            shard_scans.append(_scan_df(pages_text, bc, text_col, resolve=False))
     finally:
         # the scans reference only the broadcasts, never this plan
         distinct.unpersist()

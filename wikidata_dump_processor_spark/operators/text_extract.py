@@ -276,7 +276,7 @@ def _make_extract_kernel(scanner=None):
                              ("diag", diag), ("namespaces", nslist)):
                     out[k].append(v)
                 if scanner is not None:
-                    hits = scanner(text.lower()) if text else []
+                    hits = scanner(text) if text else []
                     out["mentions"].append(
                         [{"surface": s, "begin": b, "end": e} for s, b, e in hits]
                     )
@@ -316,7 +316,7 @@ def extract_text(pages_df):
     )
 
 
-def extract_and_detect(pages_df, aliases, force_automaton: bool = False):
+def extract_and_detect(pages_df, aliases):
     """Fused scan: extraction + dictionary mention detection in ONE
     mapInPandas pass -> EXTRACTED_WITH_MENTIONS_SCHEMA (the extracted
     frame plus a ``mentions: array<struct<surface,begin,end>>`` column).
@@ -331,7 +331,7 @@ def extract_and_detect(pages_df, aliases, force_automaton: bool = False):
     bc = broadcast_alias_list(aliases)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kern = _make_extract_kernel(make_scanner(bc.value, force_automaton))
+        kern = _make_extract_kernel(make_scanner(bc.value))
         yield from kern(batches)
 
     return pages_df.select(*_scan_projection()).mapInPandas(
