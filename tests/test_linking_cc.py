@@ -19,7 +19,9 @@ from wikidata_dump_processor_spark.operators.linking import (
     resolve_surfaces,
     unlinked_mentions,
 )
+from wikidata_dump_processor_spark.operators import mentions
 from wikidata_dump_processor_spark.operators.mentions import (
+    MAX_NESTING,
     _resolve_matches,
     detect_mentions,
     make_scanner,
@@ -60,14 +62,46 @@ def test_scanner_matches_golden_naive_loop(surfaces, text, n_shards):
     assert _resolve_matches(raw) == want
 
 
+def _prefix_chain(depth: int) -> list[str]:
+    """``a``, ``a a``, … : a trie whose regex nests ``depth`` groups."""
+    return ["a" + " a" * k for k in range(depth + 1)]
+
+
 def test_make_scanner_rejects_uncompilable_dictionary():
-    """A chain of prefix surfaces nests the regex past what ``re`` can
-    compile: a ValueError that names the cause, not a RecursionError.
-    ``re``'s parser recurses per nesting level, so the chain outgrows the
-    recursion limit in force (the test runner may have raised it)."""
-    chain = ["a" * n for n in range(1, sys.getrecursionlimit() + 1)]
-    with pytest.raises(ValueError, match="nests too deep"):
-        make_scanner(chain)
+    """A chain of prefix surfaces nests the regex one group per surface.
+    Over ``MAX_NESTING`` it is a ValueError that names the cause, under
+    the default recursion limit and under a raised one (at 5000 ``re``
+    itself would compile it), so the answer does not depend on the
+    process; a chain exactly at the cap compiles at the default limit,
+    in both modes."""
+    old = sys.getrecursionlimit()
+    try:
+        for limit in (5000, 1000):
+            sys.setrecursionlimit(limit)
+            with pytest.raises(ValueError, match="nests too deep"):
+                make_scanner(_prefix_chain(MAX_NESTING + 1))
+        at_cap = _prefix_chain(MAX_NESTING)
+        assert make_scanner(at_cap)("a a b") == [("a a", 0, 3)]
+        assert make_scanner(at_cap, resolve=False)("a a b") == [("a a", 0, 3), ("a", 2, 3)]
+    finally:
+        sys.setrecursionlimit(old)
+
+
+def test_scan_kernel_built_once_per_dictionary(monkeypatch):
+    """Every scan task calls ``make_scanner`` on the worker's copy of the
+    broadcast dictionary; the process builds its regex once per
+    dictionary and mode, not once per task."""
+    calls = []
+    build = mentions._trie_pattern
+    monkeypatch.setattr(mentions, "_trie_pattern", lambda s: calls.append(1) or build(s))
+    mentions._compiled_scanner.cache_clear()
+    dictionary = ["vienna", "marie curie"]
+    scans = [make_scanner(list(dictionary))("Vienna, Marie Curie") for _ in range(2)]
+    assert scans[0] == scans[1] == [("vienna", 0, 6), ("marie curie", 8, 19)]
+    assert len(calls) == 1
+    make_scanner(dictionary, resolve=False)
+    make_scanner(dictionary + ["danube"])
+    assert len(calls) == 3
 
 
 @pytest.fixture(scope="module")

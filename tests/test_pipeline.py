@@ -458,6 +458,25 @@ def test_one_lane_run_matches_two_lanes(spark, tmp_path):
         assert rows[2][t] and rows[2][t] == rows[4][t], t
 
 
+def test_warm_pass_compiles_no_generated_class(spark, tmp_path):
+    """A second identical pass finds every whole-stage and expression
+    class in Spark's generated-class cache: a pass needs ~146 distinct
+    classes, so under Spark's default cap of 100 (LRU) each was evicted
+    before the next pass asked for it and every pass recompiled ~140."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts = []
+    for i in range(2):
+        before = compiles.getCount()
+        run_pipeline(
+            spark, datagen.gen_pages(spark, N), datagen.gen_aliases(spark),
+            str(tmp_path / f"pass{i}"), datagen.gen_entity_catalog(spark),
+            fingerprint=f"n={N}",
+        )
+        counts.append(compiles.getCount() - before)
+    assert counts[1] == 0, counts
+
+
 def test_sql_views_over_pipeline_outputs(result, spark):
     """register_kg_views: the materialized graph is queryable via
     spark.sql, with predicate pruning available on the pred-partitioned

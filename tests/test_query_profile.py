@@ -25,6 +25,8 @@ def test_profile_query_prints_median():
     assert line["query"] == QUERY
     assert len(line["reps"]) == 2
     assert line["median"] > 0
+    # the warm-up rep compiled every generated class the reps need
+    assert line["compiles"] == 0
 
 
 def test_profile_plan_writes_plan(tmp_path):

@@ -4,12 +4,14 @@
     python tools/query_profile.py plan  <sf_dir> <name> <out>
 
 ``name`` is a key of ``queries_catalog.SPARK_QUERIES`` (the driver
-queries) or of ``queries_catalog.PYTEST_ORACLES``.  ``query`` runs it once to warm up, then
-``reps`` times (default 3) into Spark's noop sink, so a rep times the
-query's computation without a collect or a write, and prints one JSON
-line with the reps and their median.  ``plan`` writes the query's
-``explain("formatted")`` plan to ``<out>``.  The session is
-``get_spark()``'s, sized to this host.
+queries) or of ``queries_catalog.PYTEST_ORACLES``.  ``query`` runs it
+once to warm up, then ``reps`` times (default 3) into Spark's noop sink,
+so a rep times the query's computation without a collect or a write, and
+prints one JSON line with the reps, their median and ``compiles``: the
+generated classes Spark compiled during the timed reps (0 once the
+warm-up has filled the codegen cache; more means the query's classes
+fall out of it).  ``plan`` writes the query's ``explain("formatted")``
+plan to ``<out>``.  The session is ``get_spark()``'s, sized to this host.
 
 The KG pass is timed by ``perfbench/run.py`` (``--trace 1`` for its
 per-stage spans), not here.
@@ -57,16 +59,21 @@ def main(argv: list[str]) -> None:
         return
 
     reps = int(argv[3]) if len(argv) > 3 else 3
-    times = []
-    for r in range(-1, reps):  # rep -1 warms up codegen and the JIT
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def rep(r: int) -> float:
         sc.setJobDescription(f"{name}:rep{r}")
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        if r >= 0:
-            times.append(round(time.perf_counter() - t0, 3))
+        return round(time.perf_counter() - t0, 3)
+
+    rep(-1)  # warms up codegen and the JIT
+    warm = compiled.getCount()
+    times = [rep(r) for r in range(reps)]
     print(json.dumps({
         "query": name, "sf_dir": sf_dir, "slots": sc.defaultParallelism,
         "reps": times, "median": round(statistics.median(times), 3),
+        "compiles": compiled.getCount() - warm,
     }))
 
 

@@ -20,8 +20,8 @@ from __future__ import annotations
 
 import re
 from bisect import bisect_left, bisect_right
-from collections.abc import Iterator
-from functools import reduce
+from collections.abc import Iterable, Iterator
+from functools import lru_cache, reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -39,6 +39,15 @@ _END = r"(?![^\W_])"
 # Beyond that the dictionary must be partitioned (shard the alias table,
 # union the scans) — fail loudly instead of silently OOMing the driver.
 MAX_BROADCAST_ALIASES = 20_000_000
+
+# Deepest group nesting ``_trie_pattern`` builds.  ``re``'s parser
+# recurses per group, so what it compiles depends on the recursion limit
+# in force: at the default limit of 1000 the deepest trie that compiles
+# nests 493-494 groups (a prefix chain ``a``, ``a a``, …), at 5000 it is
+# 2493-2494.  A fixed cap under the default limit's gives one answer on
+# the driver and in every worker.  A 50k-surface dictionary of 1-5 word
+# phrases nests 13 deep.
+MAX_NESTING = 400
 
 
 def _alias_surfaces(aliases: DataFrame) -> DataFrame:
@@ -88,13 +97,14 @@ def _resolve_matches(matches: list[tuple[int, int, str]]) -> list[tuple[str, int
     return out
 
 
-def _trie_pattern(surfaces: list[str]) -> str:
+def _trie_pattern(surfaces: Iterable[str]) -> str:
     """A regex matching exactly ``surfaces``, factored by a character trie.
     A node is its children's continuations; a node that ends a surface
     wraps them in a greedy ``?``, so the longer continuation is tried
     first and the first match found at a position is the longest.  The
     string is built bottom-up from an explicit stack, so a deep trie is
-    not bounded by Python's recursion limit here."""
+    not bounded by Python's recursion limit here; its group nesting is
+    counted on the way and capped at ``MAX_NESTING``."""
     root: dict = {}
     for s in surfaces:
         node = root
@@ -106,14 +116,22 @@ def _trie_pattern(surfaces: list[str]) -> str:
         node = stack.pop()
         order.append(node)
         stack.extend(child for ch, child in node.items() if ch)
-    pattern: dict[int, str] = {}
+    pattern: dict[int, tuple[str, int]] = {}  # id(node) -> (regex, nesting)
     for node in reversed(order):
-        alts = [re.escape(ch) + pattern.pop(id(child)) for ch, child in node.items() if ch]
+        subs = [(re.escape(ch), *pattern.pop(id(child))) for ch, child in node.items() if ch]
+        alts = [ch + pat for ch, pat, _ in subs]
+        depth = max((d for _, _, d in subs), default=0) + (len(alts) > 1)
         pat = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
         if "" in node:
-            pat = f"(?:{pat})?" if alts else ""
-        pattern[id(node)] = pat
-    return pattern[id(root)]
+            pat, depth = (f"(?:{pat})?", depth + 1) if alts else ("", 0)
+        if depth > MAX_NESTING:
+            raise ValueError(
+                f"alias dictionary nests too deep: more than {MAX_NESTING} "
+                "nested regex groups (a long chain of surfaces that are "
+                "prefixes of each other)"
+            )
+        pattern[id(node)] = (pat, depth)
+    return pattern[id(root)][0]
 
 
 def _stored_offsets(text: str, hits: list[tuple[str, int, int]]) -> list[tuple[str, int, int]]:
@@ -122,6 +140,25 @@ def _stored_offsets(text: str, hits: list[tuple[str, int, int]]) -> list[tuple[s
     second at ``dots``; an offset moves back by one per dot before it."""
     dots = [m.start() + k + 1 for k, m in enumerate(re.finditer("İ", text))]
     return [(s, b - bisect_right(dots, b), e - bisect_left(dots, e)) for s, b, e in hits]
+
+
+@lru_cache(maxsize=4)
+def _compiled_scanner(surfaces: tuple[str, ...], resolve: bool) -> re.Pattern:
+    """The dictionary's regex, built once per process per dictionary and
+    mode: every scan task a Python worker runs reuses it (at 50k surfaces
+    the pattern build alone is 1.2-1.8 s of Python).  Four entries cover
+    both modes of two dictionaries; a sharded scan over more shards
+    rebuilds per task, as it would uncached."""
+    body = _trie_pattern(surfaces)
+    try:
+        return re.compile(
+            f"{_START}({body}){_END}" if resolve else f"{_START}(?=({body}){_END})"
+        )
+    except RecursionError:
+        raise ValueError(
+            "alias dictionary nests too deep for re to compile (RecursionError): "
+            "a long chain of surfaces that are prefixes of each other"
+        ) from None
 
 
 def make_scanner(alias_list: list[str], resolve: bool = True):
@@ -136,21 +173,12 @@ def make_scanner(alias_list: list[str], resolve: bool = True):
     resolution could drop matches differently than the full dictionary
     would).
 
-    Raises ``ValueError`` when ``re`` cannot compile the dictionary: a
-    chain of a few hundred prefix surfaces (``a``, ``a a``, ``a a a``, …)
-    nests the regex past its compiler's recursion limit."""
+    Raises ``ValueError`` when the dictionary's trie nests more than
+    ``MAX_NESTING`` groups: a chain of a few hundred prefix surfaces
+    (``a``, ``a a``, ``a a a``, …)."""
     if not alias_list:
         return lambda text: []
-    body = _trie_pattern(alias_list)
-    try:
-        rx = re.compile(
-            f"{_START}({body}){_END}" if resolve else f"{_START}(?=({body}){_END})"
-        )
-    except RecursionError:
-        raise ValueError(
-            "alias dictionary nests too deep for re to compile (RecursionError): "
-            "a long chain of surfaces that are prefixes of each other"
-        ) from None
+    rx = _compiled_scanner(tuple(alias_list), resolve)
 
     def scan(text: str) -> list[tuple[str, int, int]]:
         hits = [(m.group(1), m.start(1), m.end(1)) for m in rx.finditer(text.lower())]
