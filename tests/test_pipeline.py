@@ -9,9 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from wikidata_dump_processor_spark import datagen
-from wikidata_dump_processor_spark.plans.pipeline import MANIFEST, StageManifest, run_pipeline
+from wikidata_dump_processor_spark.plans import pipeline
+from wikidata_dump_processor_spark.plans.pipeline import (
+    MANIFEST,
+    ROWS_PER_SALT,
+    StageManifest,
+    run_pipeline,
+)
 
 N = 200
+# patched in for the salted run: 4 salts at N extracted rows
+SALTED_ROWS_PER_SALT = N // 4
 # Spark's bucket file names end in _<bucket id>[.c000].<codec>.parquet
 BUCKET_IN_NAME = r"_(\d{5})(?:\.c\d{3})?\.[\w.]*parquet$"
 
@@ -28,6 +36,20 @@ def result(spark, out):
         spark, pages, datagen.gen_aliases(spark), out,
         datagen.gen_entity_catalog(spark), fingerprint=f"n={N}",
     )
+
+
+@pytest.fixture(scope="module")
+def salted_out(spark, tmp_path_factory):
+    """The `result` pass with ROWS_PER_SALT patched low, so the
+    pred-partitioned writes run under several salts."""
+    out = str(tmp_path_factory.mktemp("pipe_salted"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "ROWS_PER_SALT", SALTED_ROWS_PER_SALT)
+        run_pipeline(
+            spark, datagen.gen_pages(spark, N), datagen.gen_aliases(spark),
+            out, datagen.gen_entity_catalog(spark), fingerprint=f"n={N}",
+        )
+    return out
 
 
 def test_all_tables_materialized(result, out):
@@ -84,27 +106,52 @@ def test_nodes_one_file_per_bucket(result, spark, out):
         assert r.file_bucket == r.bucket == r._part_id, r
 
 
-@pytest.mark.parametrize("table", ["triples", "canonical_triples"])
-def test_pred_partitioned_writes_parallel_one_file_per_salt(result, spark, out, table):
-    """Predicate-partitioned stages keep their file shape (one file per
-    (pred, salt) under each pred= directory) and are written by more than
-    one task when the session has more than one slot."""
-    path = os.path.join(out, table)
+@pytest.mark.parametrize("table, salted", [
+    pytest.param("triples", False, id="triples"),
+    pytest.param("canonical_triples", False, id="canonical_triples"),
+    pytest.param("triples", True, id="triples-salted"),
+    pytest.param("canonical_triples", True, id="canonical_triples-salted"),
+])
+def test_pred_partitioned_writes_parallel_one_file_per_salt(
+    result, salted_out, spark, out, table, salted
+):
+    """Predicate-partitioned stages keep their file shape: the rows of
+    one (pred, salt) lie in exactly one file, and a pred= directory
+    holds at most n_salts files (salts may share a writer partition,
+    pmod(murmur3(pred, salt), slots)); with one salt that is one file
+    per pred.  More than one task writes when the session has more than
+    one slot.  The salted run splits P31 over several files and holds
+    the unsalted run's rows."""
+    path = os.path.join(salted_out if salted else out, table)
     m = json.load(open(os.path.join(out, MANIFEST)))
     slots = spark.sparkContext.defaultParallelism
-    n_salts = max(1, min(slots, m["extract"]["metrics"]["rows"] // 25_000))
+    rows_per_salt = SALTED_ROWS_PER_SALT if salted else ROWS_PER_SALT
+    n_salts = max(1, min(slots, m["extract"]["metrics"]["rows"] // rows_per_salt))
+    assert n_salts > 1 if salted else n_salts == 1
     df = spark.read.parquet(path)
-    salts = {
-        r.pred: r.n
-        for r in df.groupBy("pred")
-        .agg(F.countDistinct(F.pmod(F.xxhash64("subj"), F.lit(n_salts))).alias("n"))
+    per_pair = (
+        df.select(
+            "pred", F.pmod(F.xxhash64("subj"), F.lit(n_salts)).alias("salt"),
+            F.input_file_name().alias("file"),
+        )
+        .groupBy("pred", "salt")
+        .agg(F.countDistinct("file").alias("n_files"))
         .collect()
+    )
+    assert per_pair and all(r.n_files == 1 for r in per_pair), per_pair
+    files = {
+        d[len("pred="):]: sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path) if d.startswith("pred=")
     }
-    dirs = [d for d in os.listdir(path) if d.startswith("pred=")]
-    assert len(dirs) == len(salts)
-    for d in dirs:
-        n_files = sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
-        assert n_files == salts[d[len("pred="):]], d
+    assert set(files) == {r.pred for r in per_pair}
+    assert all(n <= n_salts for n in files.values()), files
+    if salted:
+        assert files["P31"] > 1, files
+        got = df.drop("_part_id")
+        want = spark.read.parquet(os.path.join(out, table)).select(got.columns)
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
     if slots > 1:
         assert df.select("_part_id").distinct().count() > 1
 

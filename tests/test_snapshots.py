@@ -1,8 +1,6 @@
 """Snapshot catalog (plans/snapshots.py, VERDICT r5 #4): snapshot ids,
 time travel, and St3 start-snapshot-id incremental reads behind the
-StageManifest, parameterized over the JSON fallback and the pyiceberg
-backend (skip-marked where pyiceberg is absent — this sandbox ships
-none, so the iceberg rows document the seam rather than run here)."""
+StageManifest, parameterized over every name in ``snapshots.BACKENDS``."""
 
 import os
 
@@ -15,27 +13,36 @@ from wikidata_dump_processor_spark.plans.pipeline import (
     run_pipeline,
 )
 from wikidata_dump_processor_spark.plans.snapshots import (
-    iceberg_available,
+    BACKENDS,
     open_catalog,
     read_at,
     read_delta,
 )
-
-BACKENDS = [
-    "json",
-    pytest.param(
-        "pyiceberg",
-        marks=pytest.mark.skipif(
-            not iceberg_available(), reason="pyiceberg not installed"
-        ),
-    ),
-]
 
 
 def _write(spark, path, lo, hi, mode="overwrite"):
     spark.range(lo, hi).select(
         F.col("id"), (F.col("id") * 2).alias("v")
     ).coalesce(2).write.mode(mode).parquet(path)
+
+
+@pytest.mark.parametrize("backend", BACKENDS)
+def test_every_backend_name_opens_a_catalog(tmp_path, backend):
+    cat = open_catalog(str(tmp_path / "out"), backend)
+    assert cat.backend == backend and cat.current_snapshot_id("s") is None
+
+
+@pytest.mark.parametrize("backend", ["iceberg", "pyiceberg", "auto"])
+def test_unknown_backend_names_raise(tmp_path, backend):
+    """Names outside ``BACKENDS`` are refused by the catalog and by the
+    CLI's ``--snapshot-backend`` (argparse exits 2 before any Spark)."""
+    from wikidata_dump_processor_spark.__main__ import main
+
+    with pytest.raises(ValueError, match="unknown snapshot backend"):
+        open_catalog(str(tmp_path / "out"), backend)
+    with pytest.raises(SystemExit) as e:
+        main(["-", str(tmp_path / "cli"), "--snapshot-backend", backend])
+    assert e.value.code == 2
 
 
 @pytest.mark.parametrize("backend", BACKENDS)

@@ -186,64 +186,6 @@ def test_ns_usage_catalog(spark):
     assert r.ns_name == "Main" and r.ns_case == "first-letter"
 
 
-def test_dump_discovery_and_fetch(tmp_path):
-    """S5 (wdq0.pl:234-293): index scrape, size sanity gates, skip-if-
-    exists idempotence, size-vs-advertised verification."""
-    from wikidata_dump_processor_spark.plans.pipeline import IncompleteInputError
-    from wikidata_dump_processor_spark.sources.discovery import (
-        discover_dumps,
-        fetch_dumps,
-        parse_dump_index,
-        plan_fetch,
-    )
-
-    html = """
-    <a href="20201019.json.gz">20201019.json.gz</a>  19-Oct-2020 09:12  89827998242
-    <a href="20201020.json.gz">20201020.json.gz</a>  20-Oct-2020 09:12  63
-    <a href="20201021.json.gz">20201021.json.gz</a>  21-Oct-2020 09:12  500000000
-    <a href="20201022.json.gz">20201022.json.gz</a>  22-Oct-2020 09:12  120000000000
-    """
-    assert len(parse_dump_index(html)) == 4
-    gated = discover_dumps(html)
-    # dummy (63 B) and the 89.8 GB sub-full-size dump are filtered out
-    assert [r["dump_file"] for r in gated] == ["20201021.json.gz", "20201022.json.gz"]
-    assert gated[0]["date"] == "2020-10-21"
-
-    dumps = str(tmp_path / "dumps")
-    small = """<a href="20201021.json.gz">20201021.json.gz</a> x y 10"""
-    fetched_urls = []
-
-    def fake_fetch(url, dest):
-        fetched_urls.append(url)
-        with open(dest, "wb") as f:
-            f.write(b"x" * 10)
-
-    # lexeme-range gate needs a plausible size; craft one in range
-    small = small.replace(" 10", f" {400_000_000}")
-
-    def fake_fetch_full(url, dest):
-        fetched_urls.append(url)
-        with open(dest, "wb") as f:
-            f.seek(400_000_000 - 1)
-            f.write(b"\0")
-
-    plans = fetch_dumps(small, dumps, "https://dumps.example/", fake_fetch_full)
-    assert plans[0]["verified_size"] == 400_000_000 and len(fetched_urls) == 1
-    # idempotence: second run skips the existing file
-    plans2 = fetch_dumps(small, dumps, "https://dumps.example/", fake_fetch_full)
-    assert plans2[0]["action"] == "skip" and len(fetched_urls) == 1
-
-    # short fetch -> in-progress error
-    short = small.replace("20201021", "20201023")
-
-    def truncated(url, dest):
-        with open(dest, "wb") as f:
-            f.write(b"partial")
-
-    with pytest.raises(IncompleteInputError, match="in progress"):
-        fetch_dumps(short, dumps, "https://dumps.example/", truncated)
-
-
 def test_streaming_stateful_dedup_across_batches(spark, tmp_path):
     """applyInPandasWithState cross-batch dedup: a fingerprint emitted in
     batch 1 must never re-emit in batch 2 (state lives in the
@@ -386,32 +328,3 @@ def test_incremental_pipeline_run_delta_only(spark, tmp_path):
     }
     got = {(r.subj, r.pred, r.obj) for r in r2["triples"].collect()}
     assert got == expected and expected
-
-
-def test_manifest_snapshot_delta_read(spark, tmp_path):
-    """manifest_snapshot_files + new_snapshot_only = the Iceberg
-    start-snapshot-id incremental read over a stage snapshot: files added
-    after the commit are read back exactly, committed files never."""
-    from wikidata_dump_processor_spark.plans.pipeline import run_pipeline
-    from wikidata_dump_processor_spark.streaming.incremental import (
-        manifest_snapshot_files,
-        new_snapshot_only,
-    )
-
-    out = str(tmp_path / "kg")
-    res = run_pipeline(
-        spark, datagen.gen_pages(spark, 40).localCheckpoint(eager=True),
-        datagen.gen_aliases(spark), out, fingerprint="f",
-    )
-    items_path = os.path.join(out, "items")
-    seen = manifest_snapshot_files(out, "items")
-    assert seen and all(f.endswith(".parquet") and items_path in f for f in seen)
-    items = spark.read.parquet(items_path)
-    # snapshot unchanged -> empty delta
-    assert new_snapshot_only(spark, items_path, seen, schema=items.schema).count() == 0
-    # simulate an appended commit (what an Iceberg append produces)
-    extra = items.orderBy("id").limit(5)
-    extra.coalesce(1).write.mode("append").parquet(items_path)
-    delta = new_snapshot_only(spark, items_path, seen, schema=items.schema)
-    assert delta.count() == 5
-    assert {r.id for r in delta.collect()} == {r.id for r in extra.collect()}

@@ -200,6 +200,8 @@ def _query_main(argv: list[str]) -> int:
 def main(argv: list[str] | None = None) -> int:
     import argparse
 
+    from .plans.snapshots import BACKENDS
+
     if argv is None:
         argv = sys.argv[1:]
     if argv and argv[0] == "query":
@@ -254,11 +256,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--demo-pages", type=int, default=None,
                    help="generate N deterministic synthetic pages instead of reading PAGES")
     p.add_argument("--snapshot-backend", default=None,
-                   choices=["json", "iceberg", "auto"],
+                   choices=BACKENDS,
                    help="mirror every stage commit into a snapshot "
-                        "catalog (plans/snapshots.py): real pyiceberg "
-                        "snapshots when installed, a JSON snapshot log "
-                        "otherwise; manifest entries gain snapshot_id")
+                        "catalog (plans/snapshots.py; json: a JSON "
+                        "snapshot log in OUT); manifest entries gain "
+                        "snapshot_id")
     args = p.parse_args(argv)
 
     from .plans.pipeline import preflight_input_gate, run_pipeline

@@ -1,13 +1,13 @@
 """Multimodal columns: images/audio/video as opaque ``binary`` + typed
 metadata, with the Spark-side plumbing (schema, batching, partitioning)
-fully real and the codec step stubbed.
+fully real and the codec step standard-library only.
 
-The decode/feature kernels are deliberately STUBBED: the image/audio
-libraries are not in this container.  Each stub is deterministic (a pure
-function of the bytes) so the plumbing — Arrow batch shapes, UDF
-signatures, schema evolution, partition sizing — is testable end-to-end.
-Swap ``_decode_image_stub`` for a real PIL/libvips call in production;
-nothing else changes.
+Image decode has one chain, the same on every host: a real PNG decode
+and real JPEG dimensions with ``struct`` + ``zlib``, and a deterministic
+stub (a pure function of the bytes) for every other format.  Resize and
+frame sampling are deterministic stubs, so the plumbing — Arrow batch
+shapes, UDF signatures, schema evolution, partition sizing — is testable
+end-to-end.  No output depends on which packages are importable.
 """
 
 from __future__ import annotations
@@ -64,38 +64,14 @@ def _decode_image_stub(payload: bytes) -> dict:
     }
 
 
-def _decode_image_pil(payload: bytes) -> dict:
-    """Real decode via PIL (runtime feature-gated — the library is absent
-    in this container but present on a production cluster): dimensions +
-    an 8x8 average-hash perceptual hash."""
-    import io
-
-    from PIL import Image  # noqa: deferred — gated by _pick_decoder
-
-    img = Image.open(io.BytesIO(payload))
-    w, h = img.size
-    g = img.convert("L").resize((8, 8))
-    px = list(g.getdata())
-    avg = sum(px) / 64.0
-    bits = 0
-    for i, p in enumerate(px):
-        if p >= avg:
-            bits |= 1 << i
-    if bits >= 1 << 63:  # into signed long
-        bits -= 1 << 64
-    return {"width": w, "height": h, "phash": bits}
-
-
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
 def _decode_image_png_stdlib(payload: bytes) -> dict:
-    """REAL PNG decode with the standard library only (struct + zlib —
-    no PIL): IHDR dimensions, IDAT inflate, per-row filter reversal,
-    then the same 8x8 average-hash as the PIL tier over the luminance.
-    Supports the common 8-bit color types (gray / gray+alpha / RGB /
-    RGBA / palette), non-interlaced — enough to test real decoding
-    end-to-end in a container without image libraries."""
+    """REAL PNG decode with the standard library only (struct + zlib):
+    IHDR dimensions, IDAT inflate, per-row filter reversal, then an 8x8
+    average-hash over the luminance.  Supports the common 8-bit color
+    types (gray / gray+alpha / RGB / RGBA / palette), non-interlaced."""
     import struct
     import zlib
 
@@ -160,9 +136,7 @@ def _decode_image_png_stdlib(payload: bytes) -> dict:
             return px[0]
         return (299 * px[0] + 587 * px[1] + 114 * px[2]) // 1000
 
-    # 8x8 average hash over a nearest-neighbor downsample (same scheme as
-    # the PIL tier; resampling kernels differ, so the two tiers' hashes
-    # are comparable within a tier, not across tiers)
+    # 8x8 average hash over a nearest-neighbor downsample
     grid = [luma(min(gx * w // 8, w - 1), min(gy * h // 8, h - 1))
             for gy in range(8) for gx in range(8)]
     avg = sum(grid) / 64.0
@@ -220,11 +194,11 @@ def _jpeg_dimensions(payload: bytes) -> tuple[int, int, int]:
 
 
 def _decode_image_stdlib(payload: bytes) -> dict:
-    """No-image-libs tier: REAL decode for PNG payloads via
+    """The default decoder: REAL decode for PNG payloads via
     ``_decode_image_png_stdlib``; REAL dimensions for JPEG via the SOF
     header parse (phash falls back to the deterministic payload hash —
     a perceptual hash needs the full pixel decode); deterministic stub
-    for everything else (webp/... need codecs this container lacks)."""
+    for everything else (webp/... need codecs)."""
     if payload[:8] == _PNG_MAGIC:
         return _decode_image_png_stdlib(payload)
     if payload[:2] == _JPEG_MAGIC:
@@ -233,37 +207,17 @@ def _decode_image_stdlib(payload: bytes) -> dict:
     return _decode_image_stub(payload)
 
 
-def _pick_decoder():
-    """Tier order, decided inside the executor kernel where the work
-    runs: PIL when importable, else the stdlib tier (real PNG decode,
-    stub for other formats).  ``image_features(decoder="stub")`` pins
-    the pure stub."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return _decode_image_pil
-    except ImportError:
-        return _decode_image_stdlib
-
-
-def image_features(media: DataFrame, decoder: str | None = None) -> DataFrame:
+def image_features(media: DataFrame, decoder: str = "stdlib") -> DataFrame:
     """Decode + feature-extract images: Arrow-batched mapInPandas, one
     output row per input row, errors captured per row (never fail the
     task — the 100 TB rule: one corrupt jpeg must not kill a partition).
 
-    ``decoder``: None = auto (PIL when importable, else the stdlib tier
-    — real PNG decode without image libraries, stub for other formats);
-    "stub" / "pil" / "stdlib" pin a kernel (the oracle-checked driver
-    query pins "stub" so the expected output is
-    environment-independent)."""
+    ``decoder``: "stdlib" (real PNG decode and JPEG dimensions, stub for
+    other formats) or "stub" (the payload-hash stub for every format;
+    the oracle-checked driver query pins it)."""
+    decode = {"stdlib": _decode_image_stdlib, "stub": _decode_image_stub}[decoder]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = {
-            "stub": _decode_image_stub,
-            "pil": _decode_image_pil,
-            "stdlib": _decode_image_stdlib,
-            None: _pick_decoder(),
-        }[decoder]
         for pdf in batches:
             out = {k: [] for k in ("media_id", "width", "height", "n_bytes", "phash", "decode_error")}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -301,27 +255,16 @@ RESIZED_SCHEMA = T.StructType(
 
 def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
     """Resize plumbing: one resized binary per image row, Arrow-batched,
-    per-row error channel.  Kernel is PIL when importable (thumbnail +
-    re-encode), else a deterministic stub (truncated/padded payload
-    bytes) so the batch shapes and schema are testable end-to-end."""
+    per-row error channel.  STUB kernel: the payload bytes repeated or
+    truncated to a deterministic size, so the batch shapes and schema are
+    testable end-to-end."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_pil = _pick_decoder() is _decode_image_pil
         target = width * height // 64  # stub: deterministic output size
 
         def kernel(b: bytes) -> bytes:
             if not b:
                 raise NotImplementedError("empty payload")
-            if use_pil:  # pragma: no cover - container has no PIL
-                import io
-
-                from PIL import Image
-
-                img = Image.open(io.BytesIO(b))
-                img.thumbnail((width, height))
-                out = io.BytesIO()
-                img.save(out, format="PNG")
-                return out.getvalue()
             return (b * (target // max(len(b), 1) + 1))[:target]
 
         for pdf in batches:

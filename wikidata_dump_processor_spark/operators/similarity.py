@@ -20,6 +20,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -198,9 +200,7 @@ def ivf_centroids(
     spark = vectors.sparkSession
     cents = seeds
     for _ in range(lloyd_steps):
-        cdf = spark.createDataFrame(
-            [(c, vec) for c, vec in cents], "cell int, centroid array<double>"
-        )
+        cdf = cells_df(spark, cents)
         assigned = _assign_cells(v, cdf)
         means = (
             assigned.select("cell", F.posexplode("v").alias("pos", "val"))
@@ -216,6 +216,11 @@ def ivf_centroids(
             for c, vec in cents
         ]
     return cents
+
+
+def cells_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    """The (cell, centroid) table of ``ivf_centroids``' output."""
+    return local_df(spark, cents, "cell int, centroid array<double>")
 
 
 def _assign_cells(v: DataFrame, cells: DataFrame) -> DataFrame:
@@ -255,7 +260,7 @@ def ivf_topk(
     group candidates per query."""
     spark = vectors.sparkSession
     cents = ivf_centroids(vectors, n_cells, lloyd_steps, id_col, vec_col)
-    cdf = spark.createDataFrame(cents, "cell int, centroid array<double>")
+    cdf = cells_df(spark, cents)
     v = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )

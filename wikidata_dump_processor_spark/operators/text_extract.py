@@ -185,9 +185,8 @@ def split_multipage(raw_df, pages_schema=None):
 
     Scale note: this is a narrow Arrow-batched map (no shuffle), but one
     input row holding a whole dump is inherent skew — feed pre-framed
-    segments (e.g. the discovery reader's chunked fetches) so a row stays
-    well under the 2 GB Arrow record-batch bound, as the pages contract
-    already requires."""
+    segments so a row stays well under the 2 GB Arrow record-batch
+    bound, as the pages contract already requires."""
     from ..schemas import PAGES_SCHEMA
 
     schema = pages_schema or PAGES_SCHEMA

@@ -39,6 +39,9 @@ from ..operators.linking import link_mentions, mention_triples
 from ..operators.text_extract import extract_and_detect, exploded_mentions
 
 MANIFEST = "_pipeline_manifest.json"
+# extracted rows per writer salt of the pred-partitioned stages (see
+# ``by_pred_salted`` in ``run_pipeline``)
+ROWS_PER_SALT = 25_000
 
 
 class GracefulStop(RuntimeError):
@@ -90,12 +93,12 @@ class StageManifest:
     A committed entry's timestamps are ``started_at``, ``written_at`` (data
     written, metrics not yet taken) and ``committed_at``.
 
-    ``snapshot_backend`` additionally mirrors every stage commit into a
-    snapshot catalog (plans/snapshots.py: ``"json"`` side-log always,
-    ``"iceberg"`` real pyiceberg snapshots when installed, ``"auto"``
-    prefers iceberg) and records the resulting ``snapshot_id`` on the
-    manifest entry — time travel and St3 incremental reads then key on
-    real snapshot ids instead of caller-carried file sets."""
+    ``snapshot_backend`` (a name in ``snapshots.BACKENDS``: ``"json"``,
+    the JSON snapshot log) additionally mirrors every stage commit into
+    a snapshot catalog (plans/snapshots.py) and records the resulting
+    ``snapshot_id`` on the manifest entry — time travel and St3
+    incremental reads then key on snapshot ids instead of
+    caller-carried file sets."""
 
     def __init__(self, root: str, snapshot_backend: str | None = None):
         self.root = root
@@ -631,7 +634,7 @@ def run_pipeline(
     # through one writer (measured: plain repartition('pred') capped the
     # triple/canonical writes at 1.4x from 2->8 cores on 800k pages).
     n_rows = int(man.stages.get("extract", {}).get("metrics", {}).get("rows", 0))
-    n_salts = max(1, min(slots, n_rows // 25_000))
+    n_salts = max(1, min(slots, n_rows // ROWS_PER_SALT))
 
     def by_pred_salted(df):
         # an explicit partition count: a by-column repartition lets AQE

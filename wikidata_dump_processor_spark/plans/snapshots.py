@@ -4,34 +4,18 @@ Stage outputs are parquet directories; the manifest JSON records which
 files a committed stage consists of.  That file-set IS the snapshot
 identity — what Iceberg's snapshot log tracks natively
 (MIGRATION.md "The Iceberg seam").  This module makes the snapshot a
-first-class object with two interchangeable backends behind ONE
-interface, so snapshot ids, time travel, and ``start-snapshot-id``
-incremental reads (St3) stop being emulations wherever a real catalog
-is installed:
+first-class object: snapshot ids, time travel (``read_at``) and
+``start-snapshot-id`` incremental reads (St3, ``read_delta``).
 
-* ``JsonSnapshotCatalog`` — the always-available fallback: a
-  ``_snapshots.json`` log per output dir, one entry per commit holding
-  the stage's full file list.  Commit is the same atomic
-  ``os.replace`` discipline as the manifest.
-* ``PyIcebergSnapshotCatalog`` — when the pure-Python ``pyiceberg``
-  package is importable, stage commits register the SAME parquet files
-  into a local SQLite-backed Iceberg catalog via ``add_files`` (a
-  metadata-only commit: no data rewrite), so the snapshot id is a real
-  Iceberg snapshot id and any Iceberg reader can time-travel the stage
-  table.  Data-plane reads stay Spark: the catalog resolves a snapshot
-  to its file set, Spark scans the parquet.  The sandbox ships no
-  pyiceberg, so this tier is exercised by skip-marked tests
-  (tests/test_snapshots.py), guarded by ``iceberg_available()``, and
-  VALIDATED ONLY where pyiceberg is actually installed — its
-  delete+add_files transaction pattern follows the published API but
-  has never executed in this sandbox (ADVICE r6 noted exactly this;
-  ``check_duplicate_files=False`` on the add is required because the
-  same transaction's delete has not yet removed the prior references).
+``JsonSnapshotCatalog`` is the one backend: a ``_snapshots.json`` log
+per output dir, one entry per commit holding the stage's full file
+list, committed with the manifest's atomic ``os.replace`` discipline.
+``open_catalog`` and the CLI's ``--snapshot-backend`` both take their
+names from ``BACKENDS``; an Iceberg backend joins it only where it can
+be tested.
 
 Reads at scale: ``read_at``/``read_delta`` pass explicit file lists to
-``spark.read.parquet`` — the exact pattern ``new_snapshot_only``
-(streaming/incremental.py) already uses, now keyed on a snapshot id
-instead of a caller-carried seen-files set.
+``spark.read.parquet``, keyed on a snapshot id.
 """
 
 from __future__ import annotations
@@ -41,14 +25,10 @@ import json
 import os
 import time
 
+from ..session import local_df
 
-def iceberg_available() -> bool:
-    try:
-        import pyiceberg  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+# every name ``open_catalog`` accepts
+BACKENDS = ("json",)
 
 
 def _stage_files(path: str) -> list[str]:
@@ -60,7 +40,7 @@ def _stage_files(path: str) -> list[str]:
 
 
 class JsonSnapshotCatalog:
-    """Snapshot log as a JSON side file — the no-dependency backend.
+    """Snapshot log as a JSON side file.
 
     ``commit`` records the stage's CURRENT full file set (overwrite and
     append writes both reduce to "this is the committed state"); ids
@@ -109,96 +89,12 @@ class JsonSnapshotCatalog:
         raise KeyError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
 
-class PyIcebergSnapshotCatalog:
-    """Real Iceberg snapshots via pyiceberg's SQLite filesystem catalog.
-
-    Metadata-only: each stage commit ``add_files``-registers the
-    already-written parquet into the stage's Iceberg table (replacing
-    the previous content for overwrite-style stages), so the snapshot
-    id, history, and time travel come from Iceberg itself.  Guarded by
-    ``iceberg_available()``; see the module docstring for test status.
-    """
-
-    backend = "pyiceberg"
-    _NS = "wdp"
-
-    def __init__(self, root: str):
-        from pyiceberg.catalog.sql import SqlCatalog
-
-        self.root = root
-        wh = os.path.join(os.path.abspath(root), "_iceberg")
-        os.makedirs(wh, exist_ok=True)
-        self.catalog = SqlCatalog(
-            "wdp_local",
-            uri=f"sqlite:///{os.path.join(wh, 'catalog.db')}",
-            warehouse=f"file://{wh}",
-        )
-        if (self._NS,) not in self.catalog.list_namespaces():
-            self.catalog.create_namespace(self._NS)
-
-    def _ident(self, stage: str) -> str:
-        return f"{self._NS}.{stage}"
-
-    def _table(self, stage: str, sample_file: str | None = None):
-        from pyiceberg.exceptions import NoSuchTableError
-
-        try:
-            return self.catalog.load_table(self._ident(stage))
-        except NoSuchTableError:
-            if sample_file is None:
-                raise
-            import pyarrow.parquet as pq
-
-            schema = pq.read_schema(sample_file)
-            return self.catalog.create_table(self._ident(stage), schema=schema)
-
-    def commit(self, stage: str, path: str, fingerprint: str = "") -> int:
-        files = _stage_files(path)
-        if not files:
-            raise ValueError(f"stage {stage!r} has no parquet under {path}")
-        tbl = self._table(stage, sample_file=files[0])
-        with tbl.transaction() as tx:
-            if tbl.current_snapshot() is not None:
-                # overwrite-style stage commit: previous content replaced
-                from pyiceberg.expressions import AlwaysTrue
-
-                tx.delete(AlwaysTrue())
-            # check_duplicate_files=False (ADVICE r6): the delete above
-            # is part of THIS transaction, so for an append-style stage
-            # the surviving files are still referenced by the
-            # pre-transaction metadata and pyiceberg's duplicate-file
-            # check would reject re-registering them.
-            tx.add_files(file_paths=files, check_duplicate_files=False)
-        tbl = self._table(stage)
-        snap = tbl.current_snapshot()
-        return snap.snapshot_id
-
-    def snapshot_ids(self, stage: str) -> list[int]:
-        tbl = self._table(stage)
-        return [s.snapshot_id for s in tbl.history()]
-
-    def current_snapshot_id(self, stage: str) -> int | None:
-        snap = self._table(stage).current_snapshot()
-        return None if snap is None else snap.snapshot_id
-
-    def files_at(self, stage: str, snapshot_id: int) -> set[str]:
-        tbl = self._table(stage)
-        scan = tbl.scan(snapshot_id=snapshot_id)
-        return {
-            task.file.file_path.removeprefix("file://")
-            for task in scan.plan_files()
-        }
-
-
-def open_catalog(root: str, backend: str = "auto"):
-    """``auto`` prefers pyiceberg when importable, else JSON."""
-    if backend == "auto":
-        backend = "pyiceberg" if iceberg_available() else "json"
-    if backend == "pyiceberg":
-        return PyIcebergSnapshotCatalog(root)
-    if backend == "json":
-        return JsonSnapshotCatalog(root)
-    raise ValueError(f"unknown snapshot backend {backend!r}")
+def open_catalog(root: str, backend: str = "json"):
+    """The snapshot catalog of an output dir; ``backend`` is one of
+    ``BACKENDS``."""
+    if backend not in BACKENDS:
+        raise ValueError(f"unknown snapshot backend {backend!r}")
+    return JsonSnapshotCatalog(root)
 
 
 def read_at(spark, cat, stage: str, snapshot_id: int, schema=None):
@@ -223,7 +119,7 @@ def read_delta(spark, cat, stage: str, since_snapshot_id: int, schema=None):
     new = sorted(now - base)
     if not new:
         if schema is not None:
-            return spark.createDataFrame([], schema)
+            return local_df(spark, [], schema)
         if not (now or base):
             # JsonSnapshotCatalog.commit permits zero-file commits; with
             # no schema and no files anywhere there is nothing to infer
@@ -234,7 +130,7 @@ def read_delta(spark, cat, stage: str, since_snapshot_id: int, schema=None):
                 "schema was given — pass schema= to read an empty delta"
             )
         ref = spark.read.parquet(*sorted(now or base)).schema
-        return spark.createDataFrame([], ref)
+        return local_df(spark, [], ref)
     r = spark.read
     if schema is not None:
         r = r.schema(schema)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .session import local_df
+
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
@@ -1228,7 +1230,7 @@ def _q_d6(spark, sf_dir):
     # benchmark = every 17th doc's ORIGINAL text + the leak sentence;
     # corpus = docs with the leak appended for doc_id % 10 == 3
     bench = docs.filter(F.col("doc_id") % 17 == 0).select("text").unionByName(
-        spark.createDataFrame([(_LEAK_SENTENCE,)], "text string")
+        local_df(spark, [(_LEAK_SENTENCE,)], "text string")
     )
     leaky = docs.select(
         "doc_id",

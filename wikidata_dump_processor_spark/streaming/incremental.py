@@ -139,51 +139,6 @@ def streaming_exact_dedup(
     return q
 
 
-def new_snapshot_only(
-    spark: SparkSession,
-    path: str,
-    seen_files: set[str],
-    schema=None,
-) -> DataFrame:
-    """Batch-side incremental read: only files not in ``seen_files``
-    (Iceberg's incremental snapshot read stood in by file-level diffing —
-    the rcsdiff change detection of wdq_fetcher.pl:90-144).  ``schema``
-    defaults to the pages schema; pass None-able explicit schemas for
-    stage outputs (or let ``schema=...`` carry any table shape)."""
-    import glob
-    import os
-
-    schema = schema or PAGES_SCHEMA
-    files = [
-        f for f in glob.glob(os.path.join(path, "*.parquet")) if f not in seen_files
-    ]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
-
-
-def manifest_snapshot_files(out_dir: str, stage: str) -> set[str]:
-    """The ABSOLUTE file paths a committed stage snapshot consists of,
-    from the pipeline manifest's lineage metrics — the committed file
-    list is the snapshot identity, exactly what Iceberg's
-    ``start-snapshot-id`` incremental read keys on (MIGRATION.md maps
-    this operation 1:1).  ``new_snapshot_only(spark, stage_path,
-    manifest_snapshot_files(...))`` then reads precisely the files added
-    since that snapshot."""
-    import json
-    import os
-
-    with open(os.path.join(out_dir, "_pipeline_manifest.json")) as f:
-        entry = json.load(f)[stage]
-    base = entry["path"]
-    metrics = entry.get("metrics", {})
-    rels = metrics.get("files") or {
-        k: v for k, v in metrics.get("partitions", {}).items()
-        if k.endswith(".parquet")
-    }
-    return {os.path.join(base, rel) for rel in rels}
-
-
 def incremental_pipeline_run(
     spark: SparkSession,
     input_dir: str,
