@@ -95,15 +95,6 @@ def test_k_hop_edge_cases(spark, triple_rows):
     assert sizes == {"triples": len(sub), "entities": len(ents)}
 
 
-def test_k_hop_plan_broadcasts_small_frontier(spark, triple_rows):
-    tr, _ = triple_rows
-    plan = (
-        k_hop_subgraph(tr, ["Q10"], k=1, checkpoint=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-
-
 # ---------------------------------------------------------------------------
 # degree stats + PageRank
 # ---------------------------------------------------------------------------

@@ -151,15 +151,6 @@ def test_link_mentions_scoring_and_determinism(corpus, spark):
     assert linked.count() == mentions.count()
 
 
-def test_link_mentions_salted_equals_broadcast(corpus, spark):
-    ext, aliases = corpus
-    catalog = datagen.gen_entity_catalog(spark)
-    mentions = detect_mentions(ext, aliases).cache()
-    a = link_mentions(mentions, aliases, catalog, broadcast=True)
-    b = link_mentions(mentions, aliases, catalog, broadcast=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_parquet_catalog_is_not_forced_to_broadcast(spark, tmp_path):
     """The entity catalog is unbounded, so its join carries no broadcast
     hint: with auto-broadcast off, a parquet catalog is not broadcast, and
@@ -209,21 +200,6 @@ def test_connected_components_chain_and_singleton(spark):
         for r in connected_components(edges, driver_edge_threshold=0).collect()
     }
     assert got_dist == expected
-
-
-def test_rewrite_triples_shuffle_fallback(spark):
-    """Oversized-remap path: above broadcast_limit the rewrite must fall
-    back to shuffle joins and still produce identical output."""
-    triples = spark.createDataFrame(
-        [("q2", "P31", "q2", "u"), ("q3", "P279", "q9", "u")],
-        "subj string, pred string, obj string, src_url string",
-    )
-    cmap = spark.createDataFrame(
-        [("q2", "q1"), ("q3", "q3"), ("q9", "q1")], "id string, canonical_id string"
-    )
-    a = sorted(map(tuple, rewrite_triples(triples, cmap).collect()))
-    b = sorted(map(tuple, rewrite_triples(triples, cmap, broadcast_limit=0).collect()))
-    assert a == b == [("q1", "P31", "q1", "u"), ("q3", "P279", "q1", "u")]
 
 
 def test_detect_mentions_alias_gate(spark, monkeypatch):

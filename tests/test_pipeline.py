@@ -4,6 +4,7 @@ import json
 import os
 import re
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -440,6 +441,71 @@ def test_graceful_stop_and_resume(spark, tmp_path):
     assert res["canonical_triples"].count() > 0
 
 
+# run_pipeline's stop checks in order: the stage whose "finished" notice
+# requests the stop, and the stages that run commits before the check
+STOP_CHECKS = [
+    ("extract", ["extract"]),
+    ("triples", ["triples", "items", "props", "mentions"]),
+    ("nodes", ["canonical", "nodes"]),
+    ("triples_by_subj", ["triples_by_subj"]),
+    ("predicate_stats", ["predicate_stats"]),
+    ("graph_degrees", ["graph_degrees"]),
+    ("graph_pagerank", ["graph_pagerank"]),
+]
+
+
+def _stage_rows(df):
+    """A stage's rows without ``_part_id``; doubles rounded to 12 places,
+    since a PageRank sum may add its partials in another order."""
+    cols = [c for c in df.columns if c != "_part_id"]
+    return Counter(
+        repr(tuple(round(v, 12) if isinstance(v, float) else v for v in r))
+        for r in df.select(cols).collect()
+    )
+
+
+def test_graceful_stop_at_every_check(spark, tmp_path):
+    """St7 at each of run_pipeline's 7 stop checks, all optional stages
+    on: a stop requested as a stage finishes drains its group, raises
+    GracefulStop with the stages committed so far, and the next run
+    resumes after them.  The run with no stop file commits only
+    rdf_ntriples, and every stage holds the rows of a clean run."""
+    from wikidata_dump_processor_spark.plans.pipeline import GracefulStop
+
+    pages = datagen.gen_pages(spark, 80).localCheckpoint(eager=True)
+    al, cat = datagen.gen_aliases(spark), datagen.gen_entity_catalog(spark)
+    kw = dict(
+        fingerprint="stops", node_buckets=4, triples_by_subj=True,
+        table_stats=True, graph_stats=True, pagerank_iters=3, export_rdf=True,
+    )
+    clean = run_pipeline(spark, pages, al, str(tmp_path / "clean"), cat, **kw)
+    out, stop = str(tmp_path / "stopped"), str(tmp_path / "STOP")
+    committed = []
+    for stage, group in STOP_CHECKS:
+        def request_stop(msg, stage=stage):
+            if msg.startswith(f"stage {stage} finished"):
+                open(stop, "w").close()
+
+        with pytest.raises(GracefulStop) as ei:
+            run_pipeline(spark, pages, al, out, cat, stop_file=stop,
+                         notifier=request_stop, **kw)
+        os.remove(stop)
+        committed += group
+        assert sorted(ei.value.completed) == sorted(committed), stage
+
+    def committed_at():
+        man = json.load(open(os.path.join(out, MANIFEST)))
+        return {k: v.get("committed_at") for k, v in man.items()}
+
+    before = committed_at()
+    res = run_pipeline(spark, pages, al, out, cat, stop_file=stop, **kw)
+    after = committed_at()
+    assert [k for k in after if after[k] != before[k]] == ["rdf_ntriples"]
+    for name, df in clean.items():
+        if name != "manifest":
+            assert _stage_rows(res[name]) == _stage_rows(df), name
+
+
 # stop after extract, resume, then resume a complete run; prints the
 # session's slots and the stages the last pass committed again
 _LANES_RUN = """
@@ -482,7 +548,6 @@ def test_one_lane_run_matches_two_lanes(spark, tmp_path):
     and a resume of either complete run commits nothing new."""
     import subprocess
     import sys
-    from collections import Counter
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_DRIVER_MEM="1g")

@@ -259,6 +259,14 @@ def _ivf_cells(spark):
     return cells_df(spark, [(0, [1.0, 0.5]), (1, [0.0, 2.0])])
 
 
+def _long_point_lookup(spark):
+    from wikidata_dump_processor_spark.session import local_df
+    from wikidata_dump_processor_spark.sources.readers import point_lookup
+
+    table = local_df(spark, [(i,) for i in range(300)], "id long")
+    return point_lookup(table, list(range(0, 202, 2)))  # 101 ids: the join
+
+
 @pytest.mark.parametrize("make, schema", [
     (datagen.gen_aliases, ALIASES_SCHEMA),
     (datagen.gen_entity_catalog, "id string, id_num long, type string, "
@@ -266,6 +274,7 @@ def _ivf_cells(spark):
     (TR.filter_bank_df, "pred string, pred_label string, transform int"),
     (_empty_delta, "id long, v long"),
     (_ivf_cells, "cell int, centroid array<double>"),
+    (_long_point_lookup, "id long"),
 ])
 def test_small_inputs_plan_as_local_table_scan(spark, make, schema):
     """The driver-built inputs are Arrow tables: their scan is a JVM-side

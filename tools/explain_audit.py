@@ -566,9 +566,9 @@ def main():
     out.append(_fence(opt_plan, 1200, tmp))
 
     # PageRank iteration body: zero Python nodes and a bounded shuffle
-    # count — one one-time edge repartition (cached, amortized across
-    # iterations) plus at most two data-dependent Exchanges for the
-    # contribution aggregate path.
+    # count — one one-time edge repartition (persisted for the call,
+    # amortized across iterations) plus at most two data-dependent
+    # Exchanges for the contribution aggregate path.
     from wikidata_dump_processor_spark.operators.graph import (
         entity_edges,
         pagerank,
@@ -576,13 +576,28 @@ def main():
 
     # over the materialized triples snapshot (tpq), like production —
     # the raw in-session triples lineage would drag the extraction
-    # MapInPandas into every iteration's plan
-    pr = pagerank(entity_edges(tpq), max_iter=1, tol=None,
-                  checkpoint=False)
-    pr.collect()
+    # MapInPandas into every iteration's plan.  pagerank returns its
+    # ranks materialized (a local checkpoint), so the iteration's plan
+    # is read from the SQL status store: the last execution that planned
+    # the rank update (the cross join onto the dangling mass).
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    try:
+        pagerank(entity_edges(tpq), max_iter=1, tol=None)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.conf.unset("spark.sql.ui.explainMode")
+    execs = store.executionsList(first, store.executionsCount() - first)
+    final_pr = [
+        d for d in (
+            execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+        )
+        if "BroadcastNestedLoopJoin" in d
+    ][-1]
     final_pr = (
-        pr._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
+        final_pr.split("== Physical Plan ==")[-1]
+        .split("== Initial Plan ==")[0].strip()
     )
     # REPARTITION_BY_NUM exchanges are the one-time cached prologue
     # (edge/node partitioning, amortized over all iterations); the

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import AUTHCTRL_PRED
+from ..session import bounded_broadcast
 
 
 def identifier_edges(triples: DataFrame, preds: list[str] | None = None) -> DataFrame:
@@ -204,7 +205,6 @@ def canonical_remap(triples: DataFrame, preds: list[str] | None = None) -> DataF
 def rewrite_triples(
     triples: DataFrame,
     cmap: DataFrame,
-    broadcast_limit: int = 10_000_000,
     remap_count: int | None = None,
 ) -> DataFrame:
     """Rewrite subjects (and entity-valued objects) through the resolution
@@ -215,23 +215,26 @@ def rewrite_triples(
     already handles — broadcasting them would ship (and hash-build) the
     whole node catalog per executor for no effect.
 
-    The broadcast is SIZE-GATED: "bounded by the number of merges" is a
-    heuristic, not an invariant (a pathological shared-identifier corpus
-    — VIAF spam — can make the remap arbitrarily large), so the remap is
-    counted first and above ``broadcast_limit`` rows the rewrite falls
-    back to shuffle joins, where AQE's skew split handles hot canonical
-    ids.  A caller that already knows the remap size (the pipeline counts
-    it once and caches it in the stage manifest) passes ``remap_count``
-    to skip the count job and the re-checkpoint."""
+    The broadcast goes through ``session.bounded_broadcast``: "bounded by
+    the number of merges" is a heuristic, not an invariant (a
+    pathological shared-identifier corpus — VIAF spam — can make the
+    remap arbitrarily large), so the remap is counted first and above the
+    gate the rewrite falls back to shuffle joins, where AQE's skew split
+    handles hot canonical ids.  A caller that already knows the remap
+    size (the pipeline counts it once and caches it in the stage
+    manifest) passes ``remap_count`` to skip the count job and the
+    re-checkpoint."""
     remap = cmap.filter(F.col("id") != F.col("canonical_id"))
     if remap_count is None:
         remap = remap.localCheckpoint(eager=False)
         remap_count = remap.count()
-    small = remap_count <= broadcast_limit
-    subj_map = remap.select(F.col("id").alias("subj"), F.col("canonical_id").alias("_cs"))
-    obj_map = remap.select(F.col("id").alias("obj"), F.col("canonical_id").alias("_co"))
-    if small:
-        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
+    subj_map, obj_map = (
+        bounded_broadcast(
+            remap.select(F.col("id").alias(k), F.col("canonical_id").alias(c)),
+            remap_count,
+        )
+        for k, c in (("subj", "_cs"), ("obj", "_co"))
+    )
     out = (
         triples.join(subj_map, "subj", "left")
         .join(obj_map, "obj", "left")

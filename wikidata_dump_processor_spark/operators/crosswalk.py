@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import bounded_broadcast
+
 # wdq3.pl:21-23: authctrl.tsv column properties
 PERSON_PROPS = ["P213", "P214", "P227", "P244", "P496", "P19", "P20", "P21", "P31"]
 PERSON_LABEL_LANGS = ["en", "de", "fr", "it"]
@@ -114,7 +116,7 @@ def inverted_index_stats(
         F.count(F.lit(1)).alias("n")
     )
     use = props.select(F.col("prop").alias("pred"), "use_cnt")
-    return per_pred.join(F.broadcast(use), "pred", "left").select(
+    return per_pred.join(bounded_broadcast(use), "pred", "left").select(
         "pred",
         "n",
         F.when(F.coalesce("use_cnt", F.col("n")) >= hot_threshold, "bitmap")
@@ -176,7 +178,7 @@ def inverted_index(
     cold = stats.filter(F.col("n") < array_cap).select("pred")
     arrays = (
         inverted_index_entries(triples)
-        .join(F.broadcast(cold), "pred", "left_semi")
+        .join(bounded_broadcast(cold), "pred", "left_semi")
         .groupBy("pred")
         .agg(F.array_sort(F.collect_set("subj")).alias("subjects"))
     )

@@ -162,14 +162,15 @@ def curate_documents(
         # rehydrated.
         if para_dedup:
             # the working text is DERIVED (paragraph-stripped): compute
-            # it once but keep it OFF the JVM heap — a DISK_ONLY persist
-            # serializes the text blocks to spark.local.dir instead of
-            # holding them deserialized in executor memory, and BOTH
-            # text columns leave the narrow heap checkpoint
+            # it once but keep it OFF the JVM heap — a DISK_ONLY local
+            # checkpoint serializes the text blocks to spark.local.dir
+            # instead of holding them deserialized in executor memory
+            # (and, unlike a persist, leaves no cache entry behind the
+            # call), and BOTH text columns leave the narrow heap checkpoint
             from pyspark.storagelevel import StorageLevel
 
-            text_src = d.select(id_col, text_col).persist(
-                StorageLevel.DISK_ONLY
+            text_src = d.select(id_col, text_col).localCheckpoint(
+                eager=False, storageLevel=StorageLevel.DISK_ONLY
             )
             rehydrate = [text_col, "text_orig"]
         else:

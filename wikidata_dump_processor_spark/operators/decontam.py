@@ -9,10 +9,10 @@ appears in a benchmark item.  Re-expressed Spark-first:
   (``split`` / ``sequence`` / ``transform`` / ``slice`` / ``xxhash64``)
   inside whole-stage codegen — no Python in the row path;
 * the benchmark side (small by construction — eval suites are MBs) is
-  reduced to a DISTINCT n-gram-hash table and **broadcast**; the
-  document side explodes its n-gram hashes (narrow — no shuffle) into a
-  broadcast LEFT SEMI join, so the 100 TB side is never shuffled to
-  find matches;
+  reduced to a DISTINCT n-gram-hash table and **broadcast** while it
+  fits ``session.bounded_broadcast``'s gate; the document side explodes
+  its n-gram hashes (narrow — no shuffle) into a broadcast LEFT SEMI
+  join, so the 100 TB side is never shuffled to find matches;
 * only MATCHED (doc_id, hash) rows survive the semi-join; the closing
   per-doc aggregate therefore shuffles the contaminated sliver, not the
   corpus.
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import bounded_broadcast
 
 DEFAULT_NGRAM = 13
 
@@ -86,7 +88,7 @@ def contamination_counts(
     n-gram hit in the benchmark.  Docs absent from the result are clean."""
     bench = benchmark_ngram_table(benchmark, text_col, n)
     doc_grams = _gram_rows(docs, [id_col], text_col, n)
-    hits = doc_grams.join(F.broadcast(bench), "gram_hash", "left_semi")
+    hits = doc_grams.join(bounded_broadcast(bench), "gram_hash", "left_semi")
     return hits.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("contaminated_grams")
     )
@@ -115,7 +117,7 @@ def contamination_report(
         benchmark.select(bid, text_col), ["bench_id"], text_col, n
     ).distinct()
     doc_grams = _gram_rows(docs, [id_col], text_col, n)
-    hits = doc_grams.join(F.broadcast(bench), "gram_hash")
+    hits = doc_grams.join(bounded_broadcast(bench), "gram_hash")
     return hits.groupBy("bench_id").agg(
         F.countDistinct(id_col).alias("leaked_docs"),
         F.count(F.lit(1)).alias("gram_hits"),

@@ -84,7 +84,7 @@ def ngram_jaccard_pairs(
     count shared -> Jaccard via per-doc shingle counts. Pairs ordered
     id_a < id_b.
     """
-    sh = word_shingles(docs, id_col, text_col, k).cache()
+    sh = word_shingles(docs, id_col, text_col, k).localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     sh_f = sh.join(freq.filter(F.col("df") <= max_bucket), "shingle", "left_semi")
@@ -136,7 +136,9 @@ def minhash_lsh_pairs(
     (signature agreement) >= threshold when ``verify``.
     """
     r = num_hashes // bands
-    sig = minhash_signatures(docs, id_col, text_col, k, num_hashes).cache()
+    sig = minhash_signatures(
+        docs, id_col, text_col, k, num_hashes
+    ).localCheckpoint(eager=False)
     band = sig.select(
         "id",
         F.posexplode(
@@ -251,8 +253,11 @@ def wordset_similarity_join(
     vocab = vocab.withColumn(
         "wid",
         F.row_number().over(Window.partitionBy("grp").orderBy("df", "w")) - 1,
-    ).cache()  # dimension-sized (per-group vocab); shared by the width
-    # job below and the candidate plan, so tokens aggregate once
+    )
+    # dimension-sized (per-group vocab); a lazy local checkpoint shared by
+    # the width job below and the candidate plan, so tokens aggregate once
+    # (and, unlike a cache, nothing outlives the call)
+    vocab = vocab.localCheckpoint(eager=False)
     # bitmask width = max per-group vocabulary (ONE dimension-sized job)
     max_v = vocab.agg(F.max("wid")).first()[0]
     n_chunks = (int(max_v) + 64) // 64 if max_v is not None else 1
@@ -376,7 +381,7 @@ def simhash_near_pairs(
     """Near-dup pairs by SimHash: band the 64 bits into ``bands`` 16-bit
     keys (pigeonhole: hamming<=bands-1 guarantees one identical band),
     join within band, verify Hamming distance <= max_hamming."""
-    s = simhash(docs, id_col, text_col).cache()
+    s = simhash(docs, id_col, text_col).localCheckpoint(eager=False)
     width = 64 // bands
     band = s.select(
         "id",

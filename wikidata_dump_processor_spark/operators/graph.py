@@ -15,10 +15,11 @@ still returned as part of the subgraph.
 
 Scale notes (100 TB triples, bounded-k):
 
-* the frontier is a 1-column id set — broadcast into the triples join
-  while small (size-gated like rewrite_triples' remap broadcast), so a
-  typical k-hop around a handful of seeds never shuffles the triples
-  table at all: k broadcast-hash probes + parquet pushdown;
+* the frontier is a 1-column id set, counted every hop and broadcast
+  into the triples join through ``session.bounded_broadcast`` (the gate
+  rewrite_triples' remap shares), so a typical k-hop around a handful
+  of seeds never shuffles the triples table at all: k broadcast-hash
+  probes + parquet pushdown;
 * above the gate the join falls back to shuffle; on the
   subject-bucketed ``triples_by_subj`` layout (plans/pipeline.py) the
   triples side is ALREADY hash-distributed on ``subj_num``, so only
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import bounded_broadcast, local_df
 
 ENTITY_RE = r"^[QL]\d+$"
 
@@ -44,7 +45,6 @@ def k_hop_subgraph(
     seeds: list[str] | DataFrame,
     k: int = 2,
     directed: bool = True,
-    broadcast_limit: int = 5_000_000,
     max_frontier: int | None = 50_000_000,
     checkpoint: bool = True,
 ) -> DataFrame:
@@ -76,9 +76,7 @@ def k_hop_subgraph(
                 "neighborhood is exploding — lower k, raise the gate, or "
                 "pre-filter predicates"
             )
-        f_subj = (
-            F.broadcast(frontier) if n_frontier <= broadcast_limit else frontier
-        )
+        f_subj = bounded_broadcast(frontier, n_frontier)
         hop_triples = t.join(
             f_subj.withColumnRenamed("id", "subj"), "subj", "left_semi"
         )
@@ -191,16 +189,20 @@ def pagerank(
     * ONE shuffle — the contribution aggregate ``groupBy(dst)``; the
       edges⋈ranks join reuses the ranks-side hash partitioning on
       ``id`` established below (edges are repartitioned ONCE on src and
-      cached, so Exchange reuse keeps the join co-located);
+      persisted for the call, so the join stays co-located);
     * the dangling mass is folded INTO the iteration plan as a 1-row
-      scalar aggregate cross-joined (broadcast) onto the rank update —
+      scalar aggregate cross-joined onto the rank update (Spark sizes a
+      global aggregate at one row and broadcasts it) —
       no per-iteration driver job for it, the iteration body submits
       ONE job (at 100 TB × 20 iterations the old per-iteration
       ``.first()`` was ~20 extra job submissions of pure latency);
     * lineage is truncated per iteration with ``localCheckpoint`` —
       without it the plan doubles per iteration and the driver dies
       compiling iteration 15 (the CC loop learned the same lesson,
-      operators/canonicalize.py);
+      operators/canonicalize.py); ``checkpoint=False`` keeps every
+      iteration in one plan and checkpoints only the result;
+    * the result is returned materialized, and the persisted edges,
+      nodes and base are released before the call returns;
     * ``tol`` adds one L1-delta aggregate every ``tol_every``-th
       iteration (the only remaining driver scalar in the loop); pass
       ``tol=None`` for fixed-step (skips that job entirely — at 100 TB
@@ -221,108 +223,123 @@ def pagerank(
     """
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    e = edges.select("src", "dst").repartition(nparts, "src").cache()
+    # The frames every iteration joins (edges on src, nodes and base on
+    # id) are persisted, not locally checkpointed: under AQE a checkpoint
+    # reports UnknownPartitioning, so each iteration would re-shuffle
+    # them, while a persisted frame keeps its hash partitioning.  The
+    # persists are scoped to the call, so no cache entry outlives it.
+    e = edges.select("src", "dst").repartition(nparts, "src").persist()
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
         .repartition(nparts, "id")
-        .cache()
+        .persist()
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    out_deg = e.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_deg")
-    )
-    # (id, out_deg NULL for dangling) — static across iterations
-    base = nodes.join(out_deg, "id", "left")
-    if reset is not None:
-        if isinstance(reset, DataFrame):
-            # sum duplicate ids BEFORE joining: a duplicate reset key
-            # would fan the left join out and duplicate node rows
-            r_df = (
-                reset.toDF("id", "_w")
-                .withColumn("_w", F.col("_w").cast("double"))
-                .groupBy("id")
-                .agg(F.sum("_w").alias("_w"))
-            )
-        else:
-            r_df = local_df(
-                spark, [(x, 1.0) for x in set(reset)], "id string, _w double"
-            )
-        base = base.join(r_df, "id", "left").withColumn(
-            "_w", F.coalesce("_w", F.lit(0.0))
+    held = [e, nodes]
+    try:
+        n = nodes.count()
+        if n == 0:
+            return nodes.withColumn("rank", F.lit(0.0))
+        out_deg = e.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("out_deg")
         )
-        total_w, min_w = base.agg(F.sum("_w"), F.min("_w")).first()
-        if min_w is not None and min_w < 0:
-            raise ValueError(
-                f"negative reset weight ({min_w}) — a teleport "
-                "distribution needs non-negative mass"
-            )
-        total_w = total_w or 0.0
-        if total_w <= 0:
-            raise ValueError(
-                "reset distribution has zero mass on the graph's nodes"
-            )
-        base = base.withColumn("_r", F.col("_w") / F.lit(total_w)).drop("_w")
-    else:
-        base = base.withColumn("_r", F.lit(1.0 / n))
-    base = base.cache()
-    base.count()
-
-    ranks = base.select("id", F.col("_r").alias("rank"))
-    for _i in range(max_iter):
-        r = base.join(ranks, "id")
-        # dangling mass as a 1-row in-plan aggregate, broadcast onto the
-        # rank update (a cross join against one row) — NOT a driver
-        # `.first()`: the iteration body stays a single Spark job
-        dang = r.filter(F.col("out_deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-        )
-        contrib = (
-            e.join(
-                r.filter(F.col("out_deg").isNotNull()).select(
-                    F.col("id").alias("src"),
-                    (F.col("rank") / F.col("out_deg")).alias("w"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("w").alias("contrib"))
-        )
-        new_ranks = (
-            base.select("id", "_r")
-            .join(contrib, "id", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - alpha) * F.col("_r")
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("_dangling") * F.col("_r")
-                    )
-                ).alias("rank"),
-            )
-        )
-        if checkpoint:
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-        if tol is not None and (_i + 1) % max(1, tol_every) == 0:
-            delta = (
-                new_ranks.join(
-                    ranks.select("id", F.col("rank").alias("prev")), "id"
+        # (id, out_deg NULL for dangling) — static across iterations
+        base = nodes.join(out_deg, "id", "left")
+        if reset is not None:
+            if isinstance(reset, DataFrame):
+                # sum duplicate ids BEFORE joining: a duplicate reset key
+                # would fan the left join out and duplicate node rows
+                r_df = (
+                    reset.toDF("id", "_w")
+                    .withColumn("_w", F.col("_w").cast("double"))
+                    .groupBy("id")
+                    .agg(F.sum("_w").alias("_w"))
                 )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("prev"))))
-                .first()[0]
+            else:
+                r_df = local_df(
+                    spark, [(x, 1.0) for x in set(reset)], "id string, _w double"
+                )
+            base = base.join(r_df, "id", "left").withColumn(
+                "_w", F.coalesce("_w", F.lit(0.0))
             )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
+            total_w, min_w = base.agg(F.sum("_w"), F.min("_w")).first()
+            if min_w is not None and min_w < 0:
+                raise ValueError(
+                    f"negative reset weight ({min_w}) — a teleport "
+                    "distribution needs non-negative mass"
+                )
+            total_w = total_w or 0.0
+            if total_w <= 0:
+                raise ValueError(
+                    "reset distribution has zero mass on the graph's nodes"
+                )
+            base = base.withColumn("_r", F.col("_w") / F.lit(total_w)).drop("_w")
         else:
-            ranks = new_ranks
-    return ranks
+            base = base.withColumn("_r", F.lit(1.0 / n))
+        base = base.persist()
+        held.append(base)
+        base.count()
+
+        ranks = base.select("id", F.col("_r").alias("rank"))
+        for _i in range(max_iter):
+            r = base.join(ranks, "id")
+            # dangling mass as a 1-row in-plan aggregate, cross-joined onto
+            # the rank update (Spark broadcasts the one row unhinted) — NOT a
+            # driver `.first()`: the iteration body stays a single Spark job
+            dang = r.filter(F.col("out_deg").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
+            )
+            contrib = (
+                e.join(
+                    r.filter(F.col("out_deg").isNotNull()).select(
+                        F.col("id").alias("src"),
+                        (F.col("rank") / F.col("out_deg")).alias("w"),
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("w").alias("contrib"))
+            )
+            new_ranks = (
+                base.select("id", "_r")
+                .join(contrib, "id", "left")
+                .crossJoin(dang)
+                .select(
+                    "id",
+                    (
+                        F.lit(1.0 - alpha) * F.col("_r")
+                        + F.lit(alpha)
+                        * (
+                            F.coalesce("contrib", F.lit(0.0))
+                            + F.col("_dangling") * F.col("_r")
+                        )
+                    ).alias("rank"),
+                )
+            )
+            if checkpoint:
+                new_ranks = new_ranks.localCheckpoint(eager=False)
+            if tol is not None and (_i + 1) % max(1, tol_every) == 0:
+                delta = (
+                    new_ranks.join(
+                        ranks.select("id", F.col("rank").alias("prev")), "id"
+                    )
+                    .agg(F.sum(F.abs(F.col("rank") - F.col("prev"))))
+                    .first()[0]
+                )
+                ranks = new_ranks
+                if delta is not None and delta < tol:
+                    break
+            else:
+                ranks = new_ranks
+        # a materialized local checkpoint: the result outlives `held`
+        if not checkpoint:
+            ranks = ranks.localCheckpoint(eager=False)
+        ranks.count()
+        return ranks
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -333,7 +350,6 @@ def pagerank(
 def transitive_closure_from(
     edges: DataFrame,
     seeds: list[str] | DataFrame,
-    broadcast_limit: int = 5_000_000,
     max_frontier: int | None = 50_000_000,
     max_iters: int = 64,
     checkpoint: bool = True,
@@ -349,8 +365,9 @@ def transitive_closure_from(
     partition directory scan.  Returns a 1-column ``id`` DataFrame.
 
     Plan per iteration: one join of the (small) frontier against edges —
-    broadcast while the frontier is under ``broadcast_limit`` rows, so a
-    typical class-hierarchy walk never shuffles the edge table — plus an
+    broadcast while the frontier fits ``session.bounded_broadcast``'s
+    gate, so a typical class-hierarchy walk never shuffles the edge
+    table — plus an
     anti-join against the visited set; lineage truncated per hop.
     Unlike ``k_hop_subgraph`` there is no hop bound: termination is the
     fixpoint (frontier empties), with ``max_iters`` as a loud runaway
@@ -373,7 +390,7 @@ def transitive_closure_from(
                 f"{max_frontier}): a supernode closure is exploding — "
                 "pre-filter the edge set or raise the gate"
             )
-        f = F.broadcast(frontier) if n_frontier <= broadcast_limit else frontier
+        f = bounded_broadcast(frontier, n_frontier)
         nxt = (
             e.join(f.withColumnRenamed("id", "src"), "src", "left_semi")
             .select(F.col("dst").alias("id"))
@@ -421,25 +438,37 @@ def transitive_closure_pairs(
     e = edges.select(F.col("src"), F.col("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    closure = e.distinct()
+    return _closure_rounds(
+        e, e.distinct(), max_pairs, max_iters, checkpoint,
+        "transitive closure",
+        "this predicate's closure is dataset-sized — walk it seeded "
+        "(transitive_closure_from) or raise the gate",
+    )
+
+
+def _closure_rounds(
+    e: DataFrame, closure: DataFrame, max_pairs: int | None, max_iters: int,
+    checkpoint: bool, name: str, advice: str,
+) -> DataFrame:
+    """Semi-naive rounds from the distinct (src, dst) pairs ``closure``
+    over the edge set ``e`` to the fixpoint: the delta (new pairs of the
+    last round) extends by one edge and only never-seen pairs survive the
+    anti-join.  ``max_pairs`` is checked against the running total before
+    each round, ``max_iters`` bounds the rounds; ``name`` and ``advice``
+    word their errors."""
     if checkpoint:
         closure = closure.localCheckpoint(eager=False)
     # ONE driver action per round (r7, the same economy as the PageRank
     # dangling fold): count only the DELTA and keep the running total on
     # the driver — `new` is distinct and anti-joined against the
     # accumulated closure, so rounds are disjoint and
-    # total == |initial| + sum(|new|) exactly.  The old loop paid
-    # closure.count() (a full recount of the accumulated set) PLUS
-    # new.isEmpty() every round.
+    # total == |initial| + sum(|new|) exactly.
     total = closure.count()
     delta = closure
     for _i in range(max_iters):
         if max_pairs is not None and total > max_pairs:
             raise ValueError(
-                f"transitive closure hit {total} pairs (> max_pairs="
-                f"{max_pairs}): this predicate's closure is "
-                "dataset-sized — walk it seeded (transitive_closure_from) "
-                "or raise the gate"
+                f"{name} hit {total} pairs (> max_pairs={max_pairs}): {advice}"
             )
         new = (
             delta.join(
@@ -461,7 +490,7 @@ def transitive_closure_pairs(
         total += n_new
         delta = new
     raise ValueError(
-        f"closure did not converge in max_iters={max_iters} rounds — "
+        f"{name} did not converge in max_iters={max_iters} rounds — "
         "raise the gate if paths are genuinely that long"
     )
 
@@ -471,7 +500,6 @@ def transitive_closure_pairs_from(
     seeds: list[str] | DataFrame,
     max_pairs: int | None = 100_000_000,
     max_iters: int = 64,
-    broadcast_limit: int = 5_000_000,
     checkpoint: bool = True,
 ) -> DataFrame:
     """(src, dst) closure pairs restricted to ``src IN seeds`` — the
@@ -497,46 +525,14 @@ def transitive_closure_pairs_from(
     n_seeds = s.count()
     if n_seeds == 0:
         return e.limit(0)
-    sj = F.broadcast(s) if n_seeds <= broadcast_limit else s
-    closure = (
-        e.join(sj.withColumnRenamed("id", "src"), "src", "left_semi")
-        .distinct()
-    )
-    if checkpoint:
-        closure = closure.localCheckpoint(eager=False)
-    # delta-count loop: one driver action per round (see
-    # transitive_closure_pairs)
-    total = closure.count()
-    delta = closure
-    for _i in range(max_iters):
-        if max_pairs is not None and total > max_pairs:
-            raise ValueError(
-                f"seeded closure hit {total} pairs (> max_pairs="
-                f"{max_pairs}) — the seed set's reachable space is "
-                "dataset-sized; raise the gate or narrow the seeds"
-            )
-        new = (
-            delta.join(
-                e.select(F.col("src").alias("dst"), F.col("dst").alias("_nxt")),
-                "dst",
-            )
-            .select(F.col("src"), F.col("_nxt").alias("dst"))
-            .distinct()
-            .join(closure, ["src", "dst"], "left_anti")
-        )
-        if checkpoint:
-            new = new.localCheckpoint(eager=False)
-        n_new = new.count()  # materializes the checkpoint, replaces isEmpty
-        if n_new == 0:
-            return closure
-        closure = closure.unionByName(new)
-        if checkpoint:
-            closure = closure.localCheckpoint(eager=False)
-        total += n_new
-        delta = new
-    raise ValueError(
-        f"seeded closure did not converge in max_iters={max_iters} rounds "
-        "— raise the gate if paths are genuinely that long"
+    sj = bounded_broadcast(s, n_seeds)
+    return _closure_rounds(
+        e,
+        e.join(sj.withColumnRenamed("id", "src"), "src", "left_semi").distinct(),
+        max_pairs, max_iters, checkpoint,
+        "seeded closure",
+        "the seed set's reachable space is dataset-sized; raise the gate "
+        "or narrow the seeds",
     )
 
 

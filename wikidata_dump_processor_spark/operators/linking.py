@@ -8,10 +8,11 @@ Duplicate-key semantics in the reference are last-wins on hash overwrite
 (geonames.pl:73); here resolution is an explicit deterministic
 ``max_by``-style pick (SURVEY.md §7.3 hard part 4).
 
-Scale: the alias table is broadcast (dimension); mentions stream through a
-map-side join, so head-domain/mega-entity skew never concentrates a
-shuffle partition.  For alias tables too big to broadcast, use
-``link_mentions(..., broadcast=False)`` (explicit salting, north_rule).
+Scale: the per-surface winners are resolved on the alias (dimension)
+side and joined to the mention stream through ``session.bounded_broadcast``:
+broadcast while the winners fit the gate, so head-domain/mega-entity skew
+never concentrates a shuffle partition; above it the planner sort-merges
+and AQE's skew-join split breaks up hot surfaces.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .skew import salted_join
+from ..session import bounded_broadcast
 
 
 def score_candidates(cand: DataFrame, catalog: DataFrame | None = None) -> DataFrame:
@@ -72,24 +73,22 @@ def link_mentions(
     mentions: DataFrame,
     aliases: DataFrame,
     catalog: DataFrame | None = None,
-    broadcast: bool = True,
 ) -> DataFrame:
     """(url, surface, begin, end) -> one best (qid, score) per mention.
 
     Scale design: the per-surface winner is pre-resolved on the dimension
     side (``resolve_surfaces``), so the mention stream — the 10^12-row
-    side — is never shuffled: one broadcast (or salted) map-side join and
-    done.  Head-surface skew (a mega-entity alias in 20% of pages) cannot
-    concentrate a partition because there is no exchange on surface.
+    side — is never shuffled while the winners fit the broadcast gate: one
+    map-side join and done.  Head-surface skew (a mega-entity alias in 20%
+    of pages) cannot concentrate a partition because there is no exchange
+    on surface; over the gate AQE splits the skewed sort-merge partitions.
 
     Contract: multiplicity-preserving — one output row per input mention
     row, duplicates included (duplicate page urls in the input produce
     duplicate mention triples downstream).  Callers needing
     one-row-per-mention semantics dedup the mention stream first."""
     best = resolve_surfaces(aliases, catalog)
-    if broadcast:
-        return mentions.join(F.broadcast(best), "surface")
-    return salted_join(mentions, best, on=["surface"], num_salts=8)
+    return mentions.join(bounded_broadcast(best), "surface")
 
 
 def unlinked_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
@@ -97,7 +96,7 @@ def unlinked_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     reference's no_P31 list, cntprops.pl:41,54-79 and the not-found branch
     of point lookups, wdq2.pl:396-401)."""
     al = aliases.select(F.lower("alias").alias("surface")).distinct()
-    return mentions.join(F.broadcast(al), "surface", "left_anti")
+    return mentions.join(bounded_broadcast(al), "surface", "left_anti")
 
 
 def mention_triples(linked: DataFrame, pred: str = "Pmention") -> DataFrame:

@@ -224,12 +224,12 @@ def cells_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
 
 
 def _assign_cells(v: DataFrame, cells: DataFrame) -> DataFrame:
-    """Nearest-centroid (max cosine) assignment: broadcast the tiny cell
-    table, max_by per vector — one pass, no shuffle of the vector side
-    beyond the final per-id aggregation."""
+    """Nearest-centroid (max cosine) assignment: the tiny local cell
+    table broadcasts by Spark's size rule, max_by per vector — one pass,
+    no shuffle of the vector side beyond the final per-id aggregation."""
     scored = (
         v.withColumn("vn", _norm(F.col("v")))
-        .join(F.broadcast(cells.withColumn("cn", _norm(F.col("centroid")))))
+        .join(cells.withColumn("cn", _norm(F.col("centroid"))))
         .withColumn(
             "sim", _dot(F.col("v"), F.col("centroid")) / (F.col("vn") * F.col("cn"))
         )
@@ -269,7 +269,7 @@ def ivf_topk(
     ).withColumn("vn", _norm(F.col("v")))
     q = queries.select("query_id", F.col(vec_col).cast("array<double>").alias("q"))
     q_scored = q.withColumn("qn", _norm(F.col("q"))).join(
-        F.broadcast(cdf.withColumn("cn", _norm(F.col("centroid"))))
+        cdf.withColumn("cn", _norm(F.col("centroid")))
     ).withColumn(
         "sim", _dot(F.col("q"), F.col("centroid")) / (F.col("qn") * F.col("cn"))
     )

@@ -1,84 +1,37 @@
-"""Explicit skew handling: key salting for joins and two-phase aggregation.
+"""Explicit skew handling: key salting for aggregation and head-domain caps.
 
 The reference acknowledges key skew with its cardinality-adaptive index
 layout (list vs bitmap at use_cnt >= 800_000, cntprops.pl:16, 68-77).  In
-Spark, AQE skew-join splitting covers sort-merge joins; these helpers cover
-the remaining cases the north_rule calls out (head domains, mega-entities):
+Spark, AQE's skew-join split covers sort-merge joins (hot keys are split
+at run time, not salted by hand), and ``session.bounded_broadcast`` keeps
+small build sides off the shuffle; these helpers cover the remaining
+cases the north_rule calls out (head domains, mega-entities):
 
-* ``salted_join``: N-way replicate the small/dim side, salt the skewed fact
-  side — turns one hot-key partition into ``num_salts`` partitions.
 * ``two_phase_count``: partial aggregation on (key, salt) then re-aggregate
   on key — bounded partition size for hot keys even without AQE.
+* ``domain_quota_sample``: cap the documents of any one url domain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(
-    df: DataFrame,
-    num_salts: int,
-    col_name: str = "_salt",
-    cols: list[str] | None = None,
-) -> DataFrame:
-    """Attach a salt in ``[0, num_salts)`` used to split hot keys.
-
-    ``cols=None`` (default): a cheap partition-local salt —
-    ``pmod(spark_partition_id(), n)`` — which never touches row content
-    (a fact table carrying a wide ``text`` column pays nothing) and is
-    RETRY-STABLE: a recomputed task re-reads the same input split, so
-    rows keep their salt across task retries.  (The previous
-    ``monotonically_increasing_id`` round-robin was not: a retried map
+def with_salt(df: DataFrame, num_salts: int, col_name: str = "_salt") -> DataFrame:
+    """Attach a salt in ``[0, num_salts)`` used to split hot keys: a
+    partition-local ``pmod(spark_partition_id(), n)``, which never
+    touches row content (a fact table carrying a wide ``text`` column
+    pays nothing) and is RETRY-STABLE: a recomputed task re-reads the
+    same input split, so rows keep their salt across task retries.  (A
+    ``monotonically_increasing_id`` round-robin is not: a retried map
     task re-salts rows differently while already-finished reducers keep
     the old routing — the SPARK-23207 lost/duplicated-rows class.  A
     shuffle keyed on the salt must never use a nondeterministic salt.)
     All rows of one upstream partition share a salt, which costs nothing
-    for the salted operators here: ``two_phase_count``'s map-side
-    partial agg reduces to one row per (key, partition) anyway, and
-    ``salted_join`` splits a hot key across however many partitions
-    carry it.
-
-    ``cols=[...]``: content-deterministic salt ``pmod(xxhash64(cols), n)``
-    for callers that need the salt itself reproducible across runs and
-    partitionings; pick cheap columns that VARY WITHIN a hot key
-    (salting on the join key alone would give every row of that key the
-    same salt — no split).  Never hash ``df.columns`` wholesale: a wide
-    text/binary column makes the salt cost a full-document hash per
-    row."""
-    if cols is None:
-        salt = F.pmod(F.spark_partition_id(), F.lit(num_salts))
-    else:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_salts))
-    return df.withColumn(col_name, salt)
-
-
-def explode_salts(df: DataFrame, num_salts: int, col_name: str = "_salt") -> DataFrame:
-    """Replicate every row once per salt value (build/dim side)."""
-    return df.withColumn(
-        col_name, F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
-    )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    num_salts: int = 8,
-    how: str = "inner",
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Equi-join where ``fact`` has skewed join keys: fact rows get a
-    salt (round-robin by default — wide payload columns are never
-    hashed; pass ``salt_cols`` for a content-deterministic salt), dim
-    rows are replicated ``num_salts`` times, and the join key becomes
-    (on..., _salt).  Use when the dim side is too big to broadcast but
-    the fact side has mega-keys."""
-    f = with_salt(fact, num_salts, cols=salt_cols)
-    d = explode_salts(dim, num_salts)
-    out = f.join(d, on=[*on, "_salt"], how=how)
-    return out.drop("_salt")
+    for ``two_phase_count``: its map-side partial agg reduces to one row
+    per (key, partition) anyway."""
+    return df.withColumn(col_name, F.pmod(F.spark_partition_id(), F.lit(num_salts)))
 
 
 def domain_quota_sample(

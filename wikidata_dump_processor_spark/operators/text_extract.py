@@ -353,16 +353,19 @@ def ns_catalog(extracted):
 def ns_usage(extracted):
     """A10: per-namespace page counts joined to the catalog
     (wkt1.pl:176-180, 291, 297-307 — %ns catalog + per-page increment).
-    One hash agg over the page stream + a broadcast join to the
+    One hash agg over the page stream + a bounded broadcast join to the
     dimension-sized catalog."""
     from pyspark.sql import functions as F
+
+    from ..session import bounded_broadcast
 
     use = (
         extracted.filter(F.col("page_ns").isNotNull())
         .groupBy(F.col("page_ns").alias("ns_id"))
         .agg(F.count(F.lit(1)).alias("n_pages"))
     )
-    return use.join(F.broadcast(ns_catalog(extracted)), "ns_id", "left").select(
+    cat = bounded_broadcast(ns_catalog(extracted))
+    return use.join(cat, "ns_id", "left").select(
         "ns_id", "n_pages", "ns_case", "ns_name"
     )
 

@@ -142,8 +142,9 @@ def exploded_first_snaks(items: DataFrame) -> DataFrame:
 
 
 def filter_bank_df(spark):
-    """The property filter bank as a (broadcastable) DataFrame
-    (wdq1.pl:344-409 via schemas.FILTER_BANK)."""
+    """The property filter bank as a DataFrame (wdq1.pl:344-409 via
+    schemas.FILTER_BANK): an Arrow ``LocalTableScan`` whose true size
+    Spark sees, so its joins broadcast with no hint."""
     rows = [(p, lbl, tr) for p, (lbl, tr) in FILTER_BANK.items()]
     return local_df(spark, rows, "pred string, pred_label string, transform int")
 
@@ -153,8 +154,9 @@ def claim_triples(items: DataFrame) -> DataFrame:
     rows of the reference (wdq1.pl:708-726)."""
     snaks = exploded_first_snaks(items)
     bank = filter_bank_df(items.sparkSession)
-    # ~40-entry dim: always broadcast — no shuffle of the claim stream.
-    j = snaks.join(F.broadcast(bank), "pred")
+    # ~40-entry local table: Spark broadcasts it by size — no shuffle of
+    # the claim stream.
+    j = snaks.join(bank, "pred")
     return j.select(
         F.col("id").alias("subj"),
         "pred",
@@ -366,7 +368,7 @@ def authctrl_table(items: DataFrame) -> DataFrame:
     base = with_authctrl(items).filter(F.col("is_authctrl"))
     snaks = exploded_first_snaks(base).filter(F.col("pred").isin(AUTHCTRL_PROPS))
     bank = filter_bank_df(items.sparkSession).select("pred", "transform")
-    vals = snaks.join(F.broadcast(bank), "pred", "left").select(
+    vals = snaks.join(bank, "pred", "left").select(
         "id",
         "pred",
         extract_value(F.col("value"), F.coalesce("transform", F.lit(0))).alias("val"),

@@ -55,7 +55,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import bounded_broadcast, local_df
 
 POSITIONS = ("subj", "pred", "obj")
 
@@ -718,9 +718,10 @@ def attach_labels(
     Exchange; the exact-id check (``Q224`` vs ``L224`` share a numeric
     part) rides along as a residual CASE condition so Spark does NOT
     extract it as a second hash key, which would force a re-shuffle of
-    the bucketed side on ``(id_num, id)``.  The broadcast is bounded by
-    the distinct entity ids actually present in the rendered result —
-    the render path's own output dimension."""
+    the bucketed side on ``(id_num, id)``.  ``needed`` holds one row per
+    distinct entity id present in the rendered result — the render
+    path's own output dimension — so it is counted once and broadcast
+    through ``session.bounded_broadcast``'s gate."""
     from ..functions.ids import id_num
 
     cols = list(columns) if columns is not None else list(res.columns)
@@ -744,6 +745,7 @@ def attach_labels(
         probes, (F.col("__lab_num") == F.col("__p_num")) & sem_matches,
         "left_semi",
     )
+    build = bounded_broadcast(needed)
     for c in cols:
         res = res.withColumn("__probe_num", id_num(F.col(c)))
         id_matches = (
@@ -752,7 +754,7 @@ def attach_labels(
         )
         res = (
             res.join(
-                F.broadcast(needed),
+                build,
                 (F.col("__probe_num") == needed["__lab_num"]) & id_matches,
                 "left",
             )

@@ -493,8 +493,11 @@ def run_pipeline(
     and raises ``GracefulStop``; a re-run with the same fingerprint
     resumes from the manifest (wdq1.pl:142-143, 468 SIGINT model).  The
     file is checked between stage groups on every slot count: after
-    extract, after triples/items/props/mentions, after canonical + nodes
-    and before each optional stage.  Only the first check has a test.
+    extract, after triples/items/props/mentions (+ curate), and before
+    each optional stage that follows canonical + nodes (triples_by_subj,
+    predicate_stats, graph_degrees, graph_pagerank, rdf_ntriples).  There
+    is no check right after canonical + nodes unless an optional stage
+    follows.  Every check has a test.
 
     ``notifier``: St9 lifecycle announcements (plans.notify.Notifier or
     any callable) — run started/finished, per-stage started/finished,

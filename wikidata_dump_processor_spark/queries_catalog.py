@@ -277,8 +277,8 @@ def _q_j1(spark, sf_dir):
     r = _t(spark, sf_dir, "region")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -334,7 +334,7 @@ def _q_j4(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
         .agg(
             F.sum(_dec("l_quantity", 12, 2)).cast("double").alias("sum_qty"),

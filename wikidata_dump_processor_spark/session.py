@@ -10,12 +10,18 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+# The one broadcast gate: a hinted build side of more rows than this is
+# not copied to every executor; the planner picks sort-merge and AQE
+# splits the skewed partitions.
+BROADCAST_MAX_ROWS = 5_000_000
 
 
 def local_df(spark: SparkSession, rows, schema: StructType | str):
@@ -33,6 +39,20 @@ def local_df(spark: SparkSession, rows, schema: StructType | str):
         ),
         schema,
     )
+
+
+def bounded_broadcast(df: DataFrame, rows: int | None = None) -> DataFrame:
+    """``F.broadcast(df)`` when ``df`` holds at most ``BROADCAST_MAX_ROWS``
+    rows, ``df`` unchanged otherwise.  For build sides whose size Spark
+    cannot see before it runs them (a join, a distinct or a filter over a
+    data-sized input); a driver-built Arrow table, a parquet dimension or
+    a global aggregate need no hint, since Spark's own size rule
+    (``autoBroadcastJoinThreshold``) sees their true size.  ``rows`` is a
+    count the caller already holds; without it one bounded job counts at
+    most ``BROADCAST_MAX_ROWS + 1`` rows."""
+    if rows is None:
+        rows = df.limit(BROADCAST_MAX_ROWS + 1).count()
+    return F.broadcast(df) if rows <= BROADCAST_MAX_ROWS else df
 
 
 def _derived_driver_mem() -> str:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PAGES_SCHEMA
+from ..session import local_df
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -51,12 +52,13 @@ def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
 def point_lookup(table: DataFrame, ids: list, id_col: str = "id") -> DataFrame:
     """S6/J3: id-list probe (wdq2.pl:347-406).  For short lists an ``isin``
     (pushed to the scan as an IN filter — row-group pruning on a
-    sort-ordered layout); for long lists a broadcast semi-join."""
+    sort-ordered layout); for long lists a semi-join against a local
+    table, which Spark broadcasts by size."""
     if len(ids) <= 100:
         return table.filter(F.col(id_col).isin(ids))
-    spark = table.sparkSession
-    ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} {table.schema[id_col].dataType.simpleString()}")
-    return table.join(F.broadcast(ids_df), id_col, "left_semi")
+    dtype = table.schema[id_col].dataType.simpleString()
+    ids_df = local_df(table.sparkSession, [(i,) for i in ids], f"{id_col} {dtype}")
+    return table.join(ids_df, id_col, "left_semi")
 
 
 def write_json(df: DataFrame, path: str, single_file: bool = False) -> None:
